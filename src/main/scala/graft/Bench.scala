@@ -1,5 +1,6 @@
 package graft
 import org.apache.spark.sql.SparkSession
+import scala.util.control.NonFatal
 
 /** Benchmark main. Two layers (r7 verdict: the in-suite artifact alone
   * is not adjudicable — cross-query JVM state produced 7x phantom
@@ -60,9 +61,9 @@ object Bench {
     // interpreter/C1 execution on the widest projection chains and the
     // number measures JIT, not the query (SURVEY §8)
     for (warmSf <- Seq("/root/testdata/sf0.001", "/root/testdata/sf0.01")) {
-      benched.foreach { case (_, fn) =>
+      benched.foreach { case (name, fn) =>
         try { fn(spark, warmSf).queryExecution.toRdd.count() }
-        catch { case _: Throwable => () }
+        catch { case NonFatal(e) => System.err.println(s"[bench] warm-up $name at $warmSf: $e") }
       }
     }
     // SPARK_GRAFT_REPEAT=n (default 1): time each query n times and
@@ -122,7 +123,7 @@ object Bench {
           val c = benchShape(fn(spark, sfDir)).queryExecution.toRdd.count()
           times += (System.nanoTime() - t0) / 1e9
           if (wantRows) rowCounts(name) = c
-        } catch { case e: Throwable => err = e }
+        } catch { case NonFatal(e) => err = e }
       }
       if (times.isEmpty) {
         failedQueries(name) = Option(err).map(e =>
@@ -245,7 +246,7 @@ object Bench {
             }.toList
           finally src.close()
         }
-      } catch { case _: Throwable => Seq.empty }
+      } catch { case NonFatal(_) => Seq.empty }
     val history = if (only.isEmpty || bandOpt) loadHistory() else Seq.empty
     def bandOf(name: String): Option[Double] = {
       // like-with-like: only history points measured in this run's
@@ -431,5 +432,5 @@ object Bench {
         out.linesIterator.find(_.startsWith("{"))
           .flatMap(l => re.findFirstMatchIn(l).map(_.group(1).toDouble))
       }
-    } catch { case _: Throwable => None }
+    } catch { case NonFatal(_) => None }
 }

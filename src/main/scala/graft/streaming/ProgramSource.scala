@@ -37,7 +37,7 @@ object ProgramSource {
     private val spool = new Spool(spoolDir, flushLines, flushMs)
     private val reader = new FrameReader(octetCounted = false, maxMsgSize)
 
-    private val pump = daemon("graft-pump") {
+    private val pump = Spool.daemon("graft-pump") {
       try {
         var line = reader.readLine(in)
         while (line != null && running.get()) {
@@ -47,7 +47,7 @@ object ProgramSource {
       } catch { case _: java.io.IOException => () /* closed under us */ }
       running.set(false)
     }
-    private val flusher = daemon("graft-pump-flusher") {
+    private val flusher = Spool.daemon("graft-pump-flusher") {
       spool.flusherLoop(() => running.get())
     }
 
@@ -106,7 +106,7 @@ object ProgramSource {
     private val raf = new java.io.RandomAccessFile(path, "rw")
     private val fin = new java.io.FileInputStream(raf.getFD)
 
-    private val pump = daemon("graft-fifo-pump") {
+    private val pump = Spool.daemon("graft-fifo-pump") {
       val chunk = new Array[Byte](8192)
       val lines = new LineAssembler(maxMsgSize, spool.accept)
       try {
@@ -119,7 +119,7 @@ object ProgramSource {
         }
       } catch { case _: java.io.IOException => () }
     }
-    private val flusher = daemon("graft-fifo-flusher") {
+    private val flusher = Spool.daemon("graft-fifo-flusher") {
       spool.flusherLoop(() => running.get())
     }
 
@@ -135,13 +135,6 @@ object ProgramSource {
     }
   }
 
-  private def daemon(name: String)(body: => Unit): Thread = {
-    val t = new Thread(() => body, name)
-    t.setDaemon(true)
-    t.start()
-    t
-  }
-
   /** `source { program("cmdline"); }`: spawn `/bin/sh -c cmdline`,
     * stream its stdout lines. Child stderr inherits the JVM's, like
     * the reference daemon's. */
@@ -152,7 +145,7 @@ object ProgramSource {
       .start()
     val pump = new Pump(proc.getInputStream, spoolDir, maxMsgSize,
       onStop = () => proc.destroy())
-    (pump, Sources.fileLines(spark, s"$spoolDir/spool-*.log"))
+    (pump, Spool.lines(spark, spoolDir))
   }
 
   /** `source { stdin(); }` — or any caller-supplied stream (tests). */
@@ -160,14 +153,14 @@ object ProgramSource {
       maxMsgSize: Int = 65536): (Pump, DataFrame) = {
     val pump = new Pump(in, spoolDir, maxMsgSize, onStop = () =>
       try in.close() catch { case _: java.io.IOException => () })
-    (pump, Sources.fileLines(spark, s"$spoolDir/spool-*.log"))
+    (pump, Spool.lines(spark, spoolDir))
   }
 
   /** `source { pipe("/path/to/fifo"); }`. */
   def pipe(spark: SparkSession, spoolDir: String, path: String,
       maxMsgSize: Int = 65536): (PipePump, DataFrame) = {
     val pump = new PipePump(path, spoolDir, maxMsgSize)
-    (pump, Sources.fileLines(spark, s"$spoolDir/spool-*.log"))
+    (pump, Spool.lines(spark, spoolDir))
   }
 }
 

@@ -16,7 +16,8 @@ object Sources {
     * `wildcard-source.c:103-299`): glob-monitored line stream.
     * `maxFilesPerTrigger` is the fetch-limit analog (backpressure,
     * `lib/logreader.c:480`). Emits `value` (the raw line) plus
-    * `source_file` lineage (filter source() support, filter-re.c:35). */
+    * `source_file` lineage (filter source() support, filter-re.c:35). A
+    * glob is a root per file; [[Spool.lines]] says why spools avoid it. */
   def fileLines(spark: SparkSession, glob: String,
       maxFilesPerTrigger: Int = 100): DataFrame =
     spark.readStream

@@ -5,11 +5,14 @@ import java.nio.file.{Files, Paths, StandardCopyOption}
 import java.util.concurrent.ConcurrentLinkedQueue
 import java.util.concurrent.atomic.AtomicLong
 
-/** The fsync'd frame spool shared by the dev-mode socket listeners
-  * ([[TcpSource]], [[UdpSource]]): accepted frames queue in memory and
-  * drain into atomically-renamed files that the Structured Streaming
-  * file source ([[Sources.fileLines]]) tails. This is the single-node
-  * disk-buffer analog (`/root/reference/lib/diskq` role): arrival →
+import org.apache.spark.sql.{DataFrame, SparkSession, functions}
+
+/** The fsync'd frame spool shared by the dev-mode listeners
+  * ([[TcpSource]], [[UdpSource]], [[UnixSource]], [[ProgramSource]]):
+  * accepted frames queue in memory and drain into atomically-renamed
+  * files that the Structured Streaming file source tails as one
+  * directory ([[Spool.lines]]). This is the single-node disk-buffer
+  * analog (the reference's `lib/diskq` role): arrival →
   * durability is a local fsync'd rename, and position tracking is the
   * stream checkpoint. `flushLines`/`flushMs` bound arrival→visibility
   * latency like flush-lines()/flush-timeout() on the reference's
@@ -26,7 +29,6 @@ private[streaming] final class Spool(spoolDir: String,
 
   /** Frames accepted so far (the reference's `processed` counter). */
   def receivedCount: Long = received.get()
-  def hasPending: Boolean = pendingCount.get() > 0
 
   def accept(frame: String): Unit = {
     pending.add(frame)
@@ -44,9 +46,9 @@ private[streaming] final class Spool(spoolDir: String,
     }
   }
 
-  /** Drain the queue into one atomically-visible spool file: write
-    * tmp outside the glob, fsync, rename in — the file source never
-    * sees partial files. */
+  /** Drain the queue into one atomically-visible spool file: write a
+    * hidden tmp outside the file pattern, fsync, rename in — the file
+    * source never sees partial files. */
   def flush(force: Boolean): Unit = synchronized {
     if (pendingCount.get() == 0) return
     val sb = new java.lang.StringBuilder
@@ -61,7 +63,7 @@ private[streaming] final class Spool(spoolDir: String,
     pendingCount.addAndGet(-drained.toLong)
     val seq = fileSeq.incrementAndGet()
     val tmp = Paths.get(spoolDir, s".in-$seq.tmp")
-    val dst = Paths.get(spoolDir, f"spool-$seq%08d.log")
+    val dst = Paths.get(spoolDir, Spool.FilePattern.replace("*", f"$seq%08d"))
     val ch = java.nio.channels.FileChannel.open(tmp,
       java.nio.file.StandardOpenOption.CREATE,
       java.nio.file.StandardOpenOption.WRITE)
@@ -72,6 +74,33 @@ private[streaming] final class Spool(spoolDir: String,
     } finally ch.close()
     Files.move(tmp, dst, StandardCopyOption.ATOMIC_MOVE)
   }
+}
+
+private[streaming] object Spool {
+
+  /** The name pattern of finished spool files: `spool-NNNNNNNN.log`. */
+  val FilePattern = "spool-*.log"
+
+  /** A started daemon thread: a listener's acceptor, reader or flusher. */
+  def daemon(name: String)(body: => Unit): Thread = {
+    val t = new Thread(() => body, name)
+    t.setDaemon(true)
+    t.start()
+    t
+  }
+
+  /** The spool's streaming lines (`value`, full-path `source_file`).
+    * The directory is the one root, filtered by [[FilePattern]]: a glob
+    * expands into a root per file, and past the 32-root listing
+    * threshold every trigger's `latestOffset` runs a Spark job with one
+    * task per file. Hidden `.in-N.tmp` files are skipped. The directory
+    * must exist first; a [[Spool]] creates it. */
+  def lines(spark: SparkSession, spoolDir: String): DataFrame =
+    spark.readStream
+      .option("maxFilesPerTrigger", 100)
+      .option("pathGlobFilter", FilePattern)
+      .text(spoolDir)
+      .withColumn("source_file", functions.input_file_name())
 }
 
 /** What the config front end needs from any dev-mode socket listener,

@@ -1,6 +1,6 @@
 package graft.streaming
 
-import java.io.{BufferedInputStream, InputStream}
+import java.io.BufferedInputStream
 import java.net.{InetSocketAddress, ServerSocket, Socket}
 import java.nio.charset.StandardCharsets
 import java.util.concurrent.atomic.AtomicBoolean
@@ -16,9 +16,10 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
   * header line (`logproto-proxied-text-server.c` — full field parsing
   * lives in [[graft.functions.ProxyProto]]), and spools frames into
   * atomically-renamed files that the Structured Streaming file source
-  * ([[Sources.fileLines]]) tails. The spool is the single-node
-  * disk-buffer analog: arrival→durability is a local fsync'd rename,
-  * and position tracking is the stream checkpoint.
+  * tails as one directory ([[Spool.lines]]): a glob, one root per spool
+  * file, would run a listing job per trigger past 32 files. The spool is
+  * the single-node disk-buffer analog: arrival→durability is a local
+  * fsync'd rename, and position tracking is the stream checkpoint.
   *
   * This is deliberately a DEV-SCALE front door: one JVM accepting on
   * one port, like the reference process itself. At cluster scale the
@@ -51,6 +52,8 @@ object TcpSource {
     }
     private val running = new AtomicBoolean(false)
     private val spool = new Spool(spoolDir, flushLines, flushMs)
+    // framing shared with UnixSource — see [[FrameReader]]
+    private val reader = new FrameReader(octetCounted, maxMsgSize)
     private var threads: List[Thread] = Nil
 
     def boundPort: Int = server.getLocalPort
@@ -61,16 +64,16 @@ object TcpSource {
     def start(): Listener = {
       server.bind(new InetSocketAddress("127.0.0.1", port))
       running.set(true)
-      val acceptor = daemon("graft-tcp-acceptor") {
+      val acceptor = Spool.daemon("graft-tcp-acceptor") {
         while (running.get()) {
           try {
             val sock = server.accept()
-            val h = daemon(s"graft-tcp-conn-${sock.getPort}")(handle(sock))
+            val h = Spool.daemon(s"graft-tcp-conn-${sock.getPort}")(handle(sock))
             synchronized { threads = h :: threads }
           } catch { case _: java.io.IOException => () /* closed */ }
         }
       }
-      val flusher = daemon("graft-tcp-flusher") {
+      val flusher = Spool.daemon("graft-tcp-flusher") {
         spool.flusherLoop(() => running.get())
       }
       synchronized { threads = acceptor :: flusher :: threads }
@@ -83,13 +86,6 @@ object TcpSource {
       server.close()
       synchronized(threads).foreach(_.join(5000))
       spool.flush(force = true)
-    }
-
-    private def daemon(name: String)(body: => Unit): Thread = {
-      val t = new Thread(() => body, name)
-      t.setDaemon(true)
-      t.start()
-      t
     }
 
     private def handle(sock: Socket): Unit = {
@@ -113,23 +109,23 @@ object TcpSource {
         // rides the durable spool record, test_pp_reload.py). The
         // separator is U+0001 (never in a newline-framed payload).
         if (proxyProtocol) {
-          val header = readLine(in)
+          val header = reader.readLine(in)
           if (header == null ||
               !graft.functions.ProxyProtoHeader.parse(
                 org.apache.spark.unsafe.types.UTF8String
                   .fromString(header)).getBoolean(0))
             return
-          var frame = readFrame(in)
+          var frame = reader.readFrame(in)
           while (frame != null) {
-            accept(header + "\u0001" + frame)
-            frame = readFrame(in)
+            spool.accept(header + "\u0001" + frame)
+            frame = reader.readFrame(in)
           }
           return
         }
-        var frame = readFrame(in)
+        var frame = reader.readFrame(in)
         while (frame != null) {
-          accept(frame)
-          frame = readFrame(in)
+          spool.accept(frame)
+          frame = reader.readFrame(in)
         }
       } catch {
         case _: java.io.IOException => ()
@@ -138,13 +134,6 @@ object TcpSource {
         case scala.util.control.NonFatal(_) => ()
       } finally sock.close()
     }
-
-    private def accept(frame: String): Unit = spool.accept(frame)
-
-    // framing shared with UnixSource — see [[FrameReader]]
-    private val reader = new FrameReader(octetCounted, maxMsgSize)
-    private def readLine(in: InputStream): String = reader.readLine(in)
-    private def readFrame(in: InputStream): String = reader.readFrame(in)
   }
 
   /** Start a listener and return it with the streaming frame source
@@ -157,6 +146,6 @@ object TcpSource {
       tls: Option[(String, String)] = None): (Listener, DataFrame) = {
     val l = new Listener(port, spoolDir, octetCounted, proxyProtocol,
       maxMsgSize, tls = tls).start()
-    (l, Sources.fileLines(spark, s"$spoolDir/spool-*.log"))
+    (l, Spool.lines(spark, spoolDir))
   }
 }

@@ -41,7 +41,7 @@ object UdpSource {
     def start(): Listener = {
       socket.bind(new InetSocketAddress("127.0.0.1", port))
       running.set(true)
-      val receiver = daemon("graft-udp-receiver") {
+      val receiver = Spool.daemon("graft-udp-receiver") {
         // 64 KiB = the maximum UDP payload; truncation to maxMsgSize
         // happens on the decoded string below
         val buf = new Array[Byte](65536)
@@ -69,7 +69,7 @@ object UdpSource {
           }
         }
       }
-      val flusher = daemon("graft-udp-flusher") {
+      val flusher = Spool.daemon("graft-udp-flusher") {
         spool.flusherLoop(() => running.get())
       }
       threads = receiver :: flusher :: Nil
@@ -82,13 +82,6 @@ object UdpSource {
       threads.foreach(_.join(5000))
       spool.flush(force = true)
     }
-
-    private def daemon(name: String)(body: => Unit): Thread = {
-      val t = new Thread(() => body, name)
-      t.setDaemon(true)
-      t.start()
-      t
-    }
   }
 
   /** Start a listener and return it with the streaming frame source
@@ -97,6 +90,6 @@ object UdpSource {
   def listen(spark: SparkSession, spoolDir: String, port: Int = 0,
       maxMsgSize: Int = 65536): (Listener, DataFrame) = {
     val l = new Listener(port, spoolDir, maxMsgSize).start()
-    (l, Sources.fileLines(spark, s"$spoolDir/spool-*.log"))
+    (l, Spool.lines(spark, spoolDir))
   }
 }

@@ -42,11 +42,11 @@ object UnixSource {
       java.nio.file.Files.deleteIfExists(java.nio.file.Paths.get(path))
       server.bind(UnixDomainSocketAddress.of(path))
       running.set(true)
-      val acceptor = daemon("graft-unix-acceptor") {
+      val acceptor = Spool.daemon("graft-unix-acceptor") {
         while (running.get()) {
           try {
             val ch = server.accept()
-            val h = daemon("graft-unix-conn") {
+            val h = Spool.daemon("graft-unix-conn") {
               try {
                 val in = new BufferedInputStream(Channels.newInputStream(ch), 1 << 16)
                 var frame = reader.readFrame(in)
@@ -63,7 +63,7 @@ object UnixSource {
           } catch { case _: java.io.IOException => () /* closed */ }
         }
       }
-      val flusher = daemon("graft-unix-flusher") {
+      val flusher = Spool.daemon("graft-unix-flusher") {
         spool.flusherLoop(() => running.get())
       }
       synchronized { threads = acceptor :: flusher :: threads }
@@ -77,13 +77,6 @@ object UnixSource {
       spool.flush(force = true)
       java.nio.file.Files.deleteIfExists(java.nio.file.Paths.get(path))
     }
-
-    private def daemon(name: String)(body: => Unit): Thread = {
-      val t = new Thread(() => body, name)
-      t.setDaemon(true)
-      t.start()
-      t
-    }
   }
 
   /** Start a listener on `path` and return it with the streaming frame
@@ -92,6 +85,6 @@ object UnixSource {
       octetCounted: Boolean = false, maxMsgSize: Int = 65536)
       : (Listener, DataFrame) = {
     val l = new Listener(path, spoolDir, octetCounted, maxMsgSize).start()
-    (l, Sources.fileLines(spark, s"$spoolDir/spool-*.log"))
+    (l, Spool.lines(spark, spoolDir))
   }
 }

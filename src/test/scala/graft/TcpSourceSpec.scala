@@ -2,6 +2,7 @@ package graft
 
 import graft.streaming.{Sources, TcpSource}
 import org.apache.spark.sql.functions._
+import scala.jdk.CollectionConverters._
 
 /** Dev-mode TCP listener e2e: a real socket pushes syslog lines
   * through framing → spool → Structured Streaming file source →
@@ -353,6 +354,89 @@ class TcpSourceSpec extends GraftSuite {
         d.contains("\"HOST\":\"h1\"") && d.contains("\"PID\":\"7\"") &&
         d.contains("\"@timestamp\":\"2024-01-12T03:04:05+00:00\"")))
     } finally srv.stop(0)
+  }
+
+  test("spool tail: no file-listing job per trigger past 32 spool files") {
+    // the spool directory is the stream's one root: a glob root per
+    // spool file would pass the 32-root listing threshold and run a
+    // "Listing leaf files and directories" job in every latestOffset
+    val dir = java.nio.file.Files.createTempDirectory("graft_tcp_tail").toString
+    // submission times of listing jobs over this spool
+    val listings = new java.util.concurrent.ConcurrentLinkedQueue[Long]()
+    val watch = new org.apache.spark.scheduler.SparkListener {
+      override def onJobStart(
+          e: org.apache.spark.scheduler.SparkListenerJobStart): Unit = {
+        val d = Option(e.properties)
+          .flatMap(p => Option(p.getProperty("spark.job.description")))
+          .getOrElse("")
+        if (d.startsWith("Listing leaf files") && d.contains(dir))
+          listings.add(e.time)
+      }
+    }
+    var idleFrom = Long.MaxValue
+    val (listener, lines) = TcpSource.listen(spark, s"$dir/spool")
+    spark.sparkContext.addSparkListener(watch)
+    try {
+      // each 1,000 accepted lines flush one spool file
+      val n = 42000
+      send(listener.boundPort,
+        (1 to n).map(i => s"line $i").mkString("", "\n", "\n"))
+      awaitCount(listener, n.toLong)
+      listener.stop()
+      val files = new java.io.File(s"$dir/spool").list()
+        .count(_.startsWith("spool-"))
+      assert(files >= 40, s"only $files spool files")
+      val q = lines.writeStream.format("memory").queryName("tcp_tail")
+        .option("checkpointLocation", s"$dir/cp")
+        .trigger(org.apache.spark.sql.streaming.Trigger.ProcessingTime(50))
+        .start()
+      try {
+        val deadline = System.nanoTime() + 60L * 1000 * 1000 * 1000
+        while (spark.table("tcp_tail").count() < n &&
+            System.nanoTime() < deadline) Thread.sleep(100)
+        assert(spark.table("tcp_tail").count() == n)
+        // the drain's getBatch lists its 40+ files once; the idle
+        // triggers after it must list nothing
+        idleFrom = System.currentTimeMillis()
+        Thread.sleep(1000) // about twenty idle triggers
+        assert(q.isActive)
+      } finally q.stop()
+      Thread.sleep(500) // let the listener bus deliver
+      val idle = listings.iterator.asScala.count(_ >= idleFrom)
+      assert(idle == 0, s"$idle file-listing jobs ran in idle triggers")
+    } finally {
+      spark.sparkContext.removeSparkListener(watch)
+      listener.stop()
+    }
+  }
+
+  test("spool tail reads only finished spool files, with full paths") {
+    val dir = java.nio.file.Files.createTempDirectory("graft_tcp_skip").toString
+    val (listener, lines) = TcpSource.listen(spark, s"$dir/spool")
+    try {
+      // a partial in-flight file and a stray file share the directory
+      java.nio.file.Files.writeString(
+        java.nio.file.Paths.get(s"$dir/spool/.in-99.tmp"), "partial\n")
+      java.nio.file.Files.writeString(
+        java.nio.file.Paths.get(s"$dir/spool/notes.txt"), "stray\n")
+      send(listener.boundPort, "a\nb\nc\n")
+      awaitCount(listener, 3)
+      listener.stop()
+      val q = lines.writeStream.format("memory").queryName("tcp_skip")
+        .option("checkpointLocation", s"$dir/cp")
+        .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
+        .start()
+      q.awaitTermination(60000)
+      val got = spark.table("tcp_skip").collect()
+        .map(r => (r.getString(0), r.getString(1)))
+      assert(got.map(_._1).sorted.toSeq == Seq("a", "b", "c"))
+      val spoolFile = (java.util.regex.Pattern.quote(s"$dir/spool/") +
+        "spool-[0-9]{8}\\.log").r
+      got.foreach { case (_, f) =>
+        val path = new java.net.URI(f).getPath
+        assert(spoolFile.matches(path), s"source_file $f")
+      }
+    } finally listener.stop()
   }
 
   test("socket ingest sustains the reference floor (>10k msg/s)") {
