@@ -96,11 +96,13 @@ object LogPath {
     }
     def union = outs.reduce(_.unionByName(_, allowMissingColumns = true))
     // DISJOINT delivery (final/fallback structure: every non-fallback
-    // channel but the last is final, at most one fallback) + row-local
-    // channel bodies fuse to ONE scan instead of the K-scan union
-    // (graft.operators.FusedBranches, r15 VERDICT item 3). Channels
-    // with joins/aggregates (or a second fallback) keep the union —
-    // the fusion is plan-only, never semantic.
+    // channel but the last is final, at most one fallback) + row-local,
+    // deterministic channel bodies fuse to ONE scan instead of the
+    // K-scan union: each row's channel is decided once, like the
+    // reference's multiplexer, and only the columns channels set
+    // differently branch on it (graft.operators.FusedBranches).
+    // Channels with joins/aggregates (or a second fallback) keep the
+    // union — the fusion is plan-only, never semantic.
     val nonFb = channels.filterNot(_.flags.contains(Fallback))
     val disjoint = channels.count(_.flags.contains(Fallback)) <= 1 &&
       nonFb.dropRight(1).forall(_.flags.contains(Final))

@@ -78,9 +78,10 @@ object Routing {
     def union = parts.reduce(_.unionByName(_, allowMissingColumns = true))
     // DISJOINT delivery (each row reaches at most one branch) holds when
     // every non-fallback branch but the last is final and there is at
-    // most one fallback — then row-local bodies fuse into ONE scan
-    // (FusedBranches; r15 VERDICT item 3: the K-branch union re-read the
-    // source K times). Non-disjoint fan-out keeps the union compile.
+    // most one fallback — then row-local, deterministic bodies fuse into
+    // ONE scan that computes each row's branch once (FusedBranches; the
+    // K-branch union re-read the source K times). Non-disjoint fan-out
+    // keeps the union compile.
     val nonFb = branches.filterNot(_.isFallback)
     val disjoint = branches.count(_.isFallback) <= 1 &&
       nonFb.dropRight(1).forall(_.isFinal)

@@ -143,9 +143,21 @@ object RowBound {
         val idx = l.output.indexWhere(_.exprId == key.exprId)
         if (idx < 0) None
         else {
+          // a join matches -0.0 to 0.0 and NaN to NaN (Spark normalizes
+          // floating keys), but Scala's == never equates two NaNs: compare
+          // floating keys by their normalized bits. Nested keys, which
+          // may hold floats, are not judged.
           val dt = l.output(idx).dataType
-          val vals = l.data.map(_.get(idx, dt))
-          Some(vals.distinct.length == vals.length)
+          val vals = l.data.map(_.get(idx, dt) match {
+            case d: Double => java.lang.Double.doubleToLongBits(d + 0.0)
+            case f: Float => java.lang.Float.floatToIntBits(f + 0.0f)
+            case v => v
+          })
+          import org.apache.spark.sql.types.{ArrayType, MapType, StructType}
+          dt match {
+            case _: StructType | _: ArrayType | _: MapType => None
+            case _ => Some(vals.distinct.length == vals.length)
+          }
         }
       case _ => None
     }

@@ -6,6 +6,7 @@ import java.util.concurrent.ConcurrentLinkedQueue
 import java.util.concurrent.atomic.AtomicLong
 
 import org.apache.spark.sql.{DataFrame, SparkSession, functions}
+import scala.jdk.CollectionConverters._
 
 /** The fsync'd frame spool shared by the dev-mode listeners
   * ([[TcpSource]], [[UdpSource]], [[UnixSource]], [[ProgramSource]]):
@@ -23,9 +24,18 @@ private[streaming] final class Spool(spoolDir: String,
   private val pending = new ConcurrentLinkedQueue[String]()
   private val pendingCount = new AtomicLong(0)
   private val received = new AtomicLong(0)
-  private val fileSeq = new AtomicLong(0)
 
   Files.createDirectories(Paths.get(spoolDir))
+
+  // continue after the highest finished file already in the directory
+  // (a restarted listener, a config reload on the same spool), so a
+  // new file never replaces one written before
+  private val fileSeq = new AtomicLong({
+    val ds = Files.newDirectoryStream(Paths.get(spoolDir), Spool.FilePattern)
+    try ds.asScala.flatMap(_.getFileName.toString.filter(_.isDigit).toLongOption)
+      .foldLeft(0L)(math.max)
+    finally ds.close()
+  })
 
   /** Frames accepted so far (the reference's `processed` counter). */
   def receivedCount: Long = received.get()

@@ -251,6 +251,82 @@ class PlanSpec extends GraftSuite {
     }
   }
 
+  test("disjoint junctions fuse to one events scan, no union") {
+    // app_parser (LogPath.appParser), route_junction (Routing.junction)
+    // and config_pipeline_v3 (config if/elif/else) are final/fallback
+    // junctions with row-local bodies. A union compile re-scans events
+    // once per branch; FusedBranches falls back to it silently, so pin
+    // the fused shape.
+    withoutScanFloor {
+      for (q <- Seq("app_parser", "route_junction", "config_pipeline_v3")) {
+        val df = Queries.registry(q)(spark, sf)
+        assert(df.queryExecution.optimizedPlan.collect {
+          case u: org.apache.spark.sql.catalyst.plans.logical.Union => u
+        }.isEmpty, s"$q: Union in\n${df.queryExecution.optimizedPlan}")
+        df.queryExecution.toRdd.count()
+        val p = df.queryExecution.executedPlan.toString
+        val fin = p.linesIterator.takeWhile(!_.contains("== Initial Plan ==")).toSeq
+        val scans = fin.count(l => l.contains("FileScan parquet") &&
+          l.contains("events.parquet"))
+        assert(scans == 1, s"$q: expected 1 events scan, got $scans\n$p")
+      }
+    }
+  }
+
+  test("ingest config routes each row once: no union, bare pass-through " +
+      "columns, a plan that does not grow with columns x branches") {
+    // the if/elif/else pipeline of perfbench's ingest_steady workload
+    val conf = """
+    source s_net { network(transport(tcp) port(0)); };
+    filter f_keep { severity(emerg..info) and not program("cron"); };
+    parser p_kv { kv-parser(); };
+    destination d_out { file("/bench/$ROUTE.log"); };
+    log {
+      source(s_net);
+      filter(f_keep);
+      parser(p_kv);
+      if (message("action=login")) {
+        rewrite(set("auth", value("route")));
+      } elif (severity(emerg..err)) {
+        rewrite(set("alert", value("route")));
+      } else {
+        rewrite(set("bulk", value("route")));
+      };
+      destination(d_out);
+    };
+    """
+    import org.apache.spark.sql.catalyst.expressions.{AttributeReference, CaseWhen}
+    import org.apache.spark.sql.catalyst.plans.logical.{Project, Union}
+    val spool = java.nio.file.Files.createTempDirectory("graft_plan_ingest")
+    val (routes, listeners) = graft.config.ConfigCompiler.compileStreamingPipeline(
+      graft.config.ConfigParser.parse(conf), spark, spool.resolve("spool").toString)
+    try {
+      // a streaming frame only plans inside a started query; run the
+      // session's optimizer on its analyzed plan directly
+      val df = routes.head.df
+      val opt = df.sparkSession.sessionState.optimizer
+        .execute(df.queryExecution.analyzed)
+      assert(opt.collect { case u: Union => u }.isEmpty, opt.toString)
+      val nodes = opt.collect { case n =>
+        n.expressions.map(_.collect { case e => e }.size).sum }.sum
+      info(s"optimized plan: $nodes expression nodes")
+      assert(nodes <= 500, s"$nodes expression nodes\n$opt")
+      // the fused projection: the one that computes `route`
+      val fused = opt.collect { case p: Project
+        if p.projectList.exists(e => e.name == "route" &&
+          !e.isInstanceOf[AttributeReference]) => p }
+      assert(fused.size == 1, opt.toString)
+      for (c <- Seq("pri", "host", "program", "message", "values")) {
+        val e = fused.head.projectList.find(_.name == c)
+        assert(e.exists(_.isInstanceOf[AttributeReference]), s"$c: $e")
+      }
+      // the elif junction's channels join the outer route: `route` is one
+      // CASE over the index, not a CASE nesting the inner one
+      val route = fused.head.projectList.find(_.name == "route").get
+      assert(route.collect { case c: CaseWhen => c }.size == 1, route.toString)
+    } finally listeners.values.foreach(_.stop())
+  }
+
   test("bestPerCluster is two salted max_by aggregates, no window sort") {
     // a row_number window would sort each component in one task — the
     // boilerplate mega-cluster straggler. The salted form is two hash

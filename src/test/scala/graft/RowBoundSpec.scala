@@ -40,4 +40,21 @@ class RowBoundSpec extends GraftSuite {
     val semi = left.join(dupDim, left("lang") === dupDim("k"), "left_semi")
     assert(RowBound.upperBound(semi).contains(n))
   }
+
+  test("build keys a join equates (-0.0/0.0, NaN/NaN) are not a unique " +
+      "lookup") {
+    // Spark normalizes floating join keys, so both build rows match the
+    // probe and the join may double its probe side
+    val left = Tables.documents(spark, sf)
+      .withColumn("z", lit(0.0)).withColumn("nan", lit(Double.NaN))
+    val n = left.count()
+    for ((probe, dim) <- Seq(
+        col("z") -> Seq(-0.0, 0.0).toDF("k"),
+        col("nan") -> Seq(Double.NaN, Double.NaN).toDF("k"),
+        col("nan").cast("float") -> Seq(Float.NaN, Float.NaN).toDF("k"))) {
+      val joined = left.join(broadcast(dim), probe === dim("k"), "left")
+      assert(joined.count() == n * 2, s"$probe")
+      assert(RowBound.upperBound(joined).contains(n * 2), s"$probe")
+    }
+  }
 }

@@ -463,4 +463,29 @@ class TcpSourceSpec extends GraftSuite {
       assert(spooled == n.toLong)
     } finally listener.stop()
   }
+
+  test("a restarted listener on the same spool keeps the earlier files") {
+    // spool file numbers continue after the highest one on disk: a second
+    // listener (process restart, config reload) must not rename its first
+    // file over the previous run's unread lines
+    val dir = java.nio.file.Files.createTempDirectory("graft_tcp_restart").toString
+    val (first, lines) = TcpSource.listen(spark, s"$dir/spool")
+    try {
+      send(first.boundPort, "first\n")
+      awaitCount(first, 1)
+    } finally first.stop()
+    val (second, _) = TcpSource.listen(spark, s"$dir/spool")
+    try {
+      send(second.boundPort, "second\n")
+      awaitCount(second, 1)
+    } finally second.stop()
+    val q = lines.writeStream.format("memory").queryName("tcp_restart")
+      .option("checkpointLocation", s"$dir/cp")
+      .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
+      .start()
+    q.awaitTermination(60000)
+    val got = spark.table("tcp_restart").select("value")
+      .collect().map(_.getString(0)).sorted.toSeq
+    assert(got == Seq("first", "second"), got)
+  }
 }
