@@ -222,15 +222,8 @@ object Bench {
             .filter(_.contains("\"sf\":\"" + sfDir + "\""))
             // band history is keyed by core count (r15 VERDICT item 2:
             // the driver's 8-core PERF run appended 8-core medians into
-            // the band the 32-core runs adjudicate against). Lines
-            // predating the key carry no "cpus" field; every committed
-            // full-suite line was a 32-core run except that one PERF
-            // cell, so legacy lines count as cpus=32 (one stray 8-core
-            // point among >=8 trailing medians is washed out by the
-            // per-query band median) and are excluded at any other
-            // core count.
-            .filter(l => if (l.contains("\"cpus\":"))
-              l.contains("\"cpus\":\"" + cpus + "\"") else cpus == "32")
+            // the band the 32-core runs adjudicate against)
+            .filter(_.contains("\"cpus\":\"" + cpus + "\""))
             .map { l =>
               val qpart = l.indexOf("\"queries\":")
               val qs =

@@ -95,6 +95,29 @@ object ConfigCompiler {
     compileStreamingPipeline(cfg, spark,
       java.nio.file.Files.createTempDirectory("graft_net").toString)._1
 
+  /** Session defaults of a streaming pipeline. An explicit setting of a
+    * key wins: in the session, or in the Hadoop configuration sessions
+    * start from (`core-site.xml`, `spark.hadoop.*`).
+    * - Stateful pipelines (grouping-by/correlate/suppress/throttle) use
+    *   the RocksDB state store: the HDFS-backed default holds every open
+    *   context on-heap per executor, which does not survive 100 TB/day
+    *   of correlation state; RocksDB spills to local disk with bounded
+    *   heap.
+    * - `file:` checkpoints and sinks go through
+    *   [[graft.streaming.LocalFiles]], which sets permissions and reads
+    *   links without forking a process per file. */
+  private def streamingSessionDefaults(
+      spark: org.apache.spark.sql.SparkSession): Unit = {
+    // the session's settings are copied in with a source of their own
+    val hadoop = spark.sessionState.newHadoopConf()
+    def userSet(key: String) =
+      Option(hadoop.getPropertySources(key)).exists(_.exists(_ != "core-default.xml"))
+    (("spark.sql.streaming.stateStore.providerClass" ->
+        "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider") +:
+      graft.streaming.LocalFiles.SessionDefaults).foreach { case (key, value) =>
+      if (!userSet(key)) spark.conf.set(key, value) }
+  }
+
   /** [[compileStreaming]] plus the live socket listeners it started —
     * `network(transport(tcp|udp) port(N))` / `syslog(transport(...))`
     * source statements (`modules/afsocket/afinet-source.c`) bind a
@@ -110,14 +133,7 @@ object ConfigCompiler {
   def compileStreamingPipeline(cfg0: Config,
       spark: org.apache.spark.sql.SparkSession, spoolBase: String)
       : (Seq[Route], Map[String, graft.streaming.SocketListener]) = {
-    // stateful pipelines (grouping-by/correlate/suppress/throttle)
-    // default to the RocksDB state store: the HDFS-backed default holds
-    // every open context on-heap per executor, which does not survive
-    // 100 TB/day of correlation state; RocksDB spills to local disk
-    // with bounded heap. An explicit user/session setting wins.
-    if (spark.conf.getOption("spark.sql.streaming.stateStore.providerClass").isEmpty)
-      spark.conf.set("spark.sql.streaming.stateStore.providerClass",
-        "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider")
+    streamingSessionDefaults(spark)
     val cfg = expandTemplates(cfg0)
     var listeners = Map.empty[String, graft.streaming.SocketListener]
     val sources0 = cfg.sources.map { case (name, blk) =>
