@@ -1,15 +1,31 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
+import org.apache.spark.scheduler.{SparkListener, SparkListenerStageCompleted, SparkListenerTaskEnd}
+import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.execution.{DataSourceScanExec, FormattedMode, SparkPlan}
+import org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanHelper
+import org.apache.spark.sql.execution.exchange.{Exchange, ReusedExchangeExec}
+import scala.collection.mutable
 
-/** Dev plan-inspection main: print the formatted physical plan of a
-  * registry query at a given SF dir (the `.explain("formatted")`
-  * discipline from the build instructions, runnable outside tests).
+/** Dev plan-inspection and attribution main: print the formatted
+  * physical plan of a registry query at a given SF dir (the
+  * `.explain("formatted")` discipline from the build instructions,
+  * runnable outside tests).
   *
   * Usage: runMain graft.Explain <sfDir> <query1,query2,...> [exec]
-  * `exec` additionally RUNS the query first so AQE's final plan (the
-  * one with runtime join strategy changes) is printed, not the static
-  * estimate.
+  *
+  * `exec` answers where a query spent its time. After warming the
+  * query at [[Harness.warmDirs]], it builds, plans and runs it once in
+  * the bench's timed shape ([[Harness.benchShape]]) and prints, before
+  * the formatted plan (then AQE's final plan, with runtime join
+  * strategy changes, not the static estimate):
+  *  - build, plan and run ms (DataFrame construction; analysis,
+  *    optimization and physical planning; `toRdd.count`);
+  *  - one row per stage run while building, planning or running,
+  *    heaviest first: tasks, summed executor run time, median and max
+  *    task duration (ms), shuffle read/write, spill and input KiB;
+  *  - the Exchange, ReusedExchange and file-scan node counts of the
+  *    final plan, subqueries included.
   *
   * SPARK_GRAFT_PLAN_DIR=<dir> [SPARK_GRAFT_PLAN_SUFFIX=_before]:
   * instead of stdout, write each query's `.explain("formatted")`
@@ -17,14 +33,91 @@ import org.apache.spark.sql.SparkSession
   * deliverable (plans/r15/). `all` as the query list expands to the
   * whole registry.
   */
-object Explain {
+object Explain extends AdaptiveSparkPlanHelper {
+
+  private final class StageAgg {
+    var name = ""
+    var tasks = 0
+    val taskMs = mutable.ArrayBuffer.empty[Long]
+    var runMs = 0L
+    var shuffleReadB = 0L
+    var shuffleWriteB = 0L
+    var spillB = 0L
+    var inputB = 0L
+  }
+
+  /** Per-stage task metrics of every job run while it is registered. */
+  private final class StageListener extends SparkListener {
+    val stages = mutable.LinkedHashMap.empty[Int, StageAgg]
+    override def onTaskEnd(e: SparkListenerTaskEnd): Unit = synchronized {
+      val a = stages.getOrElseUpdate(e.stageId, new StageAgg)
+      a.tasks += 1
+      a.taskMs += e.taskInfo.duration
+      val m = e.taskMetrics
+      if (m != null) {
+        a.runMs += m.executorRunTime
+        a.shuffleReadB += m.shuffleReadMetrics.totalBytesRead
+        a.shuffleWriteB += m.shuffleWriteMetrics.bytesWritten
+        a.spillB += m.memoryBytesSpilled + m.diskBytesSpilled
+        a.inputB += m.inputMetrics.bytesRead
+      }
+    }
+    override def onStageCompleted(e: SparkListenerStageCompleted): Unit =
+      synchronized {
+        stages.getOrElseUpdate(e.stageInfo.stageId, new StageAgg).name =
+          e.stageInfo.name
+      }
+  }
+
+  /** (Exchange, ReusedExchange, scan) node counts of a physical plan,
+    * through AQE query stages and subqueries. */
+  def census(plan: SparkPlan): (Int, Int, Int) = {
+    val nodes = collectWithSubqueries(plan) { case p => p }
+    (nodes.count(_.isInstanceOf[Exchange]),
+      nodes.count(_.isInstanceOf[ReusedExchangeExec]),
+      nodes.count(_.isInstanceOf[DataSourceScanExec]))
+  }
+
+  /** Warm `fn` up, then build, plan and run it once at `sfDir` in the
+    * bench's timed shape, print the attribution and return the frame. */
+  private def attribute(spark: SparkSession, name: String,
+      fn: (SparkSession, String) => DataFrame, sfDir: String): DataFrame = {
+    for (w <- Harness.warmDirs)
+      Harness.benchShape(fn(spark, w)).queryExecution.toRdd.count()
+    val listener = new StageListener
+    spark.sparkContext.addSparkListener(listener)
+    val t0 = System.nanoTime()
+    val df = Harness.benchShape(fn(spark, sfDir))
+    val t1 = System.nanoTime()
+    df.queryExecution.executedPlan
+    val t2 = System.nanoTime()
+    df.queryExecution.toRdd.count()
+    val t3 = System.nanoTime()
+    // task-end events arrive asynchronously on the listener bus
+    org.apache.spark.graft.ListenerDrain.waitUntilEmpty(spark.sparkContext)
+    spark.sparkContext.removeSparkListener(listener)
+    println(s"===== $name exec =====")
+    println(f"build ${(t1 - t0) / 1e6}%.1f ms  plan ${(t2 - t1) / 1e6}%.1f ms  " +
+      f"run ${(t3 - t2) / 1e6}%.1f ms")
+    println(f"${"stage"}%6s ${"tasks"}%6s ${"task_ms"}%9s ${"med_ms"}%7s " +
+      f"${"max_ms"}%7s ${"shuf_rd_kb"}%11s ${"shuf_wr_kb"}%11s " +
+      f"${"spill_kb"}%9s ${"input_kb"}%9s  name")
+    for ((id, a) <- listener.stages.toSeq.sortBy(-_._2.runMs)) {
+      val ts = a.taskMs.sorted
+      val med = if (ts.isEmpty) 0L else ts(ts.length / 2)
+      val mx = if (ts.isEmpty) 0L else ts.last
+      println(f"$id%6d ${a.tasks}%6d ${a.runMs}%9d $med%7d $mx%7d " +
+        f"${a.shuffleReadB / 1024}%11d ${a.shuffleWriteB / 1024}%11d " +
+        f"${a.spillB / 1024}%9d ${a.inputB / 1024}%9d  " +
+        a.name.takeWhile(_ != '('))
+    }
+    val (exchanges, reused, scans) = census(df.queryExecution.executedPlan)
+    println(s"exchanges $exchanges  reused $reused  scans $scans")
+    df
+  }
+
   def main(args: Array[String]): Unit = {
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = SparkSession.builder().master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false").getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = Harness.session(sys.env.getOrElse("SPARK_GRAFT_CPUS", "32"))
     val registry = SparkEntry.queries ++ Queries.benchOnly.toMap
     val exec = args.length > 2 && args(2) == "exec"
     val planDir = sys.env.get("SPARK_GRAFT_PLAN_DIR")
@@ -34,10 +127,10 @@ object Explain {
       else args(1).split(",").toSeq
     planDir.foreach(d => new java.io.File(d).mkdirs())
     for (name <- names) {
-      val df = registry(name)(spark, args(0))
-      if (exec) df.queryExecution.toRdd.count()
-      val formatted = df.queryExecution.explainString(
-        org.apache.spark.sql.execution.FormattedMode)
+      val df =
+        if (exec) attribute(spark, name, registry(name), args(0))
+        else registry(name)(spark, args(0))
+      val formatted = df.queryExecution.explainString(FormattedMode)
       planDir match {
         case Some(d) =>
           val w = new java.io.PrintWriter(

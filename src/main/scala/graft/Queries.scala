@@ -1267,9 +1267,7 @@ object Queries {
     * 183.7 -> 76.9 s). On healthy data the zero-hot fast path
     * (Sessions.skewSessionAgg step 1b) returns the EXACT unsplit
     * sorted-run plan, so the default costs one bounded detection pass
-    * and nothing else. SPARK_GRAFT_SESSION_SPLIT overrides the budget;
-    * 0 or "off" restores the r14 always-unsplit route (and is what the
-    * uniform-layout A/B cells use). */
+    * and nothing else. */
   private def sessionSplit: Option[Long] = Sessions.defaultHotKeyBudget
 
   private val groupingBySession = Q("grouping_by_session",
@@ -1549,22 +1547,17 @@ object Queries {
     * 0.7 on an LSH band candidate) of a corpus doc or of a smaller-id
     * wave doc. Same md5p31 oracle hash family as dedup_minhash_lsh —
     * DuckDB replays signatures, banding, both candidate sets, and the
-    * verification, then applies the same admission rule. */
+    * verification, then applies the same admission rule. Admission runs
+    * in Dedup's default regime: the wave broadcasts up to 1M docs and
+    * takes the shuffle fallback above that. */
   private val dedupMinhashIncr = Q("dedup_minhash_incremental",
     (s, d) => {
       val docs = Tables.documents(s, d)
-      // SPARK_GRAFT_MINHASH_WAVE_CAP: scale-matrix knob to force the
-      // admission regime — 0 forces the shuffle fallback at any wave
-      // size, a huge value forces broadcast (the crossover cells);
-      // unset = the production default (broadcast <= 1M-doc waves)
-      val cap = sys.env.get("SPARK_GRAFT_MINHASH_WAVE_CAP")
-        .map(_.trim.toLong).getOrElse(1000000L)
       Dedup.minhashIncrementalAdmitted(
           docs.filter(col("doc_id") % 10 === 0),
           docs.filter(col("doc_id") % 10 =!= 0),
           col("doc_id"), col("text"), shingleK = 3, numHashes = 32,
-          bands = 8, threshold = 0.7, algo = "md5p31", hashBandKeys = false,
-          maxBroadcastWave = cap)
+          bands = 8, threshold = 0.7, algo = "md5p31", hashBandKeys = false)
         .select(col("doc_id")).orderBy(col("doc_id"))
     },
     Some("""WITH toks AS (
@@ -4511,8 +4504,8 @@ object Queries {
     // split budget so EVERY key takes the hot-key split+stitch path —
     // maximal-overhead correctness exercise for the machinery, not a
     // production plan. The bench measures the session family's
-    // production shape via grouping_by_session/suppress (and the skew
-    // matrix cells measure the split plan under SPARK_GRAFT_SESSION_SPLIT
-    // with the production budget).
+    // production shape via grouping_by_session/suppress, whose default
+    // budget (Sessions.defaultHotKeyBudget) is what the skew matrix
+    // cells measure.
     "grouping_by_skew_split", "suppress_skew_split")
 }

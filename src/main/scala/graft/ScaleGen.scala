@@ -62,14 +62,7 @@ object ScaleGen {
     val only = if (args.length > 4)
       args(4).split(",").map(_.trim).filter(_.nonEmpty).toSet
     else Set.empty[String]
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = Harness.session(sys.env.getOrElse("SPARK_GRAFT_CPUS", "32"))
     generate(spark, baseDir, outDir, factor, files, only)
     spark.stop()
   }

@@ -1,6 +1,5 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
 
 /** Dev layout generator: a SKEWED events table for the stateful-
@@ -19,12 +18,7 @@ object SkewGen {
     val src = args(0)
     val out = args(1)
     val pct = if (args.length > 2) args(2).toInt else 50
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = SparkSession.builder().master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false").getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = Harness.session(sys.env.getOrElse("SPARK_GRAFT_CPUS", "32"))
     val ev = spark.read.parquet(s"$src/events.parquet")
     val skewed = ev.withColumn("user_id",
       when(pmod(xxhash64(col("event_id")), lit(100)) < pct, lit(0L))

@@ -17,37 +17,6 @@ object Tables {
     if (name == "events") normalizeEventTs(floored) else floored
   }
 
-  /** Scale-adaptive scan-parallelism floor (optimization guide §2.5
-    * "input skew: one huge unsplittable file → repartition immediately
-    * after the read"): a table whose planned scan yields fewer splits
-    * than the session's cores — the single-small-file, one-row-group
-    * shape every local SF directory has — serializes every pre-shuffle
-    * operator of every consumer onto one task while the other cores
-    * idle. Hash-repartition such scans on the table's first column
-    * (the generated tables' unique key — deterministic under task
-    * retry, unlike a rand-derived key) up to defaultParallelism.
-    *
-    * Scale behavior: the gate reads the PLANNED scan partition count,
-    * so any input big enough to split into >= cores tasks (anything
-    * past a few hundred MB, let alone 100 TB) takes no extra exchange
-    * at all — this is a floor for degenerate inputs, not a tuned
-    * constant. The exchange it does add on tiny inputs moves only
-    * those tiny bytes. Knob: `spark.graft.scanFloor` session conf,
-    * falling back to SPARK_GRAFT_SCAN_FLOOR, falling back to
-    * defaultParallelism; <= 1 disables. PlanSpec's at-scale shape pins
-    * (corpus-never-exchanges etc.) set the conf to 0: they assert the
-    * plan a >= cores-splits input yields, which is exactly what the
-    * gate produces there; the floor exchange itself has its own gate
-    * test.
-    *
-    * The partition expression is xxhash64(first column), NOT the bare
-    * column: HashPartitioning(pk) would SATISFY downstream
-    * aggregate/join requirements keyed on pk, deleting the exchange
-    * that self-joining consumers reuse — measured on dedup_keep_best,
-    * losing that reuse re-ran the whole simhash subtree once per join
-    * side (1.9 s → 3.4 s). A derived expression matches no
-    * requirement, so every original exchange (and its ReusedExchange)
-    * stays put. */
   /** Load-scope opt-out from the scan floor, for query shapes whose
     * ENTIRE pre-exchange work is trivial projection feeding an
     * immediate data exchange (verified per call site against the
@@ -77,16 +46,47 @@ object Tables {
     * code, i.e. the added per-stage scheduling overhead exceeded the
     * parallelism gain once inputs are tiny (r15 VERDICT item 1). Size the
     * width by input volume instead: one partition per
-    * `spark.graft.scanFloorBytesPerPart` (conf > SPARK_GRAFT_SCAN_FLOOR_BYTES
-    * env > 96 KiB) of on-disk parquet, capped at the floor (cores). At any
+    * [[scanFloorBytesPerPart]] of on-disk parquet, capped at the floor. At any
     * real scale the planned-splits gate disables the whole mechanism, so
     * the budget only shapes the degenerate-tiny-input regime; 96 KiB was
     * chosen by same-session alternating A/B over the r15 driver-regressed
     * basket at 32 AND 8 cores (OPTIMIZATION_r16.md Change 1). */
+  private val scanFloorBytesPerPart: Long = 96L * 1024
+
+  /** Scale-adaptive scan-parallelism floor (optimization guide §2.5
+    * "input skew: one huge unsplittable file → repartition immediately
+    * after the read"): a table whose planned scan yields fewer splits
+    * than the session's cores — the single-small-file, one-row-group
+    * shape every local SF directory has — serializes every pre-shuffle
+    * operator of every consumer onto one task while the other cores
+    * idle. Hash-repartition such scans on the table's first column
+    * (the generated tables' unique key — deterministic under task
+    * retry, unlike a rand-derived key), at most floor-wide.
+    *
+    * Scale behavior: the gate reads the PLANNED scan partition count,
+    * so any input big enough to split into >= cores tasks (anything
+    * past a few hundred MB, let alone 100 TB) takes no extra exchange
+    * at all — this is a floor for degenerate inputs, not a tuned
+    * constant. The exchange it does add on tiny inputs moves only
+    * those tiny bytes. The floor is defaultParallelism; the
+    * `spark.graft.scanFloor` session conf overrides it and <= 1
+    * disables (that is how [[noScanFloor]] works). PlanSpec's at-scale
+    * shape pins (corpus-never-exchanges etc.) run under [[noScanFloor]]:
+    * they assert the plan a >= cores-splits input yields, which is
+    * exactly what the gate produces there; the floor exchange itself
+    * has its own gate test.
+    *
+    * The partition expression is xxhash64(first column), NOT the bare
+    * column: HashPartitioning(pk) would SATISFY downstream
+    * aggregate/join requirements keyed on pk, deleting the exchange
+    * that self-joining consumers reuse — measured on dedup_keep_best,
+    * losing that reuse re-ran the whole simhash subtree once per join
+    * side (1.9 s → 3.4 s). A derived expression matches no
+    * requirement, so every original exchange (and its ReusedExchange)
+    * stays put. */
   private def withScanFloor(spark: SparkSession, sfDir: String,
       name: String, df: DataFrame): DataFrame = {
-    val floor = spark.conf.getOption("spark.graft.scanFloor")
-      .orElse(sys.env.get("SPARK_GRAFT_SCAN_FLOOR")).map(_.toInt)
+    val floor = spark.conf.getOption("spark.graft.scanFloor").map(_.toInt)
       .getOrElse(spark.sparkContext.defaultParallelism)
     if (floor <= 1) df
     else {
@@ -98,11 +98,8 @@ object Tables {
           val fs = path.getFileSystem(spark.sessionState.newHadoopConf())
           (df.rdd.getNumPartitions, fs.getContentSummary(path).getLength)
         })
-      val perPart = spark.conf.getOption("spark.graft.scanFloorBytesPerPart")
-        .orElse(sys.env.get("SPARK_GRAFT_SCAN_FLOOR_BYTES")).map(_.toLong)
-        .getOrElse(96L * 1024)
-      val width = math.min(floor.toLong,
-        math.max(1L, (bytes + perPart - 1) / perPart)).toInt
+      val width = math.min(floor.toLong, math.max(1L,
+        (bytes + scanFloorBytesPerPart - 1) / scanFloorBytesPerPart)).toInt
       if (scanParts >= width || width <= 1) df
       else df.repartition(width, xxhash64(col(df.columns.head)))
     }

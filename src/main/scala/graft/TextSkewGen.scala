@@ -1,6 +1,5 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
 
 /** Dev layout generator: a SKEWED-TEXT documents table for the dedup
@@ -31,12 +30,7 @@ object TextSkewGen {
     val out = args(1)
     val clusterPct = if (args.length > 2) args(2).toInt else 30
     val identPm = if (args.length > 3) args(3).toInt else 1
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = SparkSession.builder().master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false").getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = Harness.session(sys.env.getOrElse("SPARK_GRAFT_CPUS", "32"))
     val docs = spark.read.parquet(s"$src/documents.parquet")
     val n = docs.count()
     val nClusters = math.max(1L, n * clusterPct / 100 / 100) // ~100 docs each

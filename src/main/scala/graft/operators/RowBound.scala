@@ -33,18 +33,9 @@ object RowBound {
     new java.util.concurrent.ConcurrentHashMap[(String, Long), Long]()
 
   def upperBound(df: DataFrame): Option[Long] =
-    try {
-      val b = bound(df.queryExecution.analyzed,
-        df.sparkSession.sessionState.newHadoopConf())
-      if (System.getProperty("graft.rowbound.debug") != null)
-        System.err.println(s"[rowbound] bound=$b")
-      b
-    } catch {
-      case scala.util.control.NonFatal(e) =>
-        if (System.getProperty("graft.rowbound.debug") != null)
-          System.err.println(s"[rowbound] threw $e")
-        None
-    }
+    try bound(df.queryExecution.analyzed,
+      df.sparkSession.sessionState.newHadoopConf())
+    catch { case scala.util.control.NonFatal(_) => None }
 
   private def bound(plan: LogicalPlan,
       conf: org.apache.hadoop.conf.Configuration): Option[Long] = plan match {
@@ -114,11 +105,7 @@ object RowBound {
           Some(counts.sum)
         case _ => None
       }
-    case other =>
-      if (System.getProperty("graft.rowbound.debug") != null)
-        System.err.println(s"[rowbound] blocked by ${other.getClass.getSimpleName}: " +
-          other.toString.linesIterator.take(2).mkString(" | "))
-      None
+    case _ => None
   }
 
   /** Some(true) iff `plan` bottoms out in a LocalRelation (through

@@ -34,16 +34,9 @@ object Sessions {
     * within the r14 acceptance bar of 2-3x uniform). On healthy data
     * the zero-hot fast path in [[skewSessionAgg]] returns the EXACT
     * unsplit plan, so defaulting the protection ON costs one bounded
-    * detection pass and nothing else. SPARK_GRAFT_SESSION_SPLIT
-    * overrides the budget; `0` / `off` restores the always-unsplit
-    * route (the uniform-layout A/B cells use that). Read per call so
-    * harness overrides apply without session restarts. */
-  def defaultHotKeyBudget: Option[Long] =
-    sys.env.get("SPARK_GRAFT_SESSION_SPLIT").map(_.trim).filter(_.nonEmpty) match {
-      case Some(v) if v == "0" || v.equalsIgnoreCase("off") => None
-      case Some(v) => Some(v.toLong)
-      case None => Some(200000L)
-    }
+    * detection pass and nothing else. Callers that want the
+    * always-unsplit route pass `splitHotKeysOver = None`. */
+  val defaultHotKeyBudget: Option[Long] = Some(200000L)
 
   /** grouping-by() (`/root/reference/modules/dbparser/groupingby.c:
     * 35-51,479-487`): sessionize rows per `key` with an inactivity gap

@@ -283,7 +283,7 @@ object MediaFixtures {
     // bit stream into a preallocated buffer (every code is <= 12 bits,
     // codes = clear + w*h pixels + eoi) — the ByteArrayOutputStream +
     // per-pixel Range-closure original was a measured hot spot of every
-    // video/GIF fixture build (graft.pipeline.MicroMedia, r15)
+    // video/GIF fixture build (OPTIMIZATION_r15.md, r15)
     val lzw = new Array[Byte]((width * height + 2) * 12 / 8 + 2)
     var lzwLen = 0
     var cur = 0L; var nbits = 0; var cw = minCodeSize + 1

@@ -210,7 +210,7 @@ object MediaSamples {
     // bytes, then mask `width` bits — replaces the original
     // bit-at-a-time loop (~width dependent shifts per code), the
     // dominant cost of every GIF/video decode pass (measured via
-    // graft.pipeline.MicroMedia, r15 optimization round).
+    // a per-clip micro-bench, OPTIMIZATION_r15.md).
     var acc = 0L
     var accBits = 0
     var bytePos = 0

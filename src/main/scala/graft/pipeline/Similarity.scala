@@ -295,7 +295,7 @@ object Similarity {
     *
     * Past `flatMax` the default is the THREE-level tree ([[assignTree]],
     * O(N·k^⅓) — r9 verdict #1); `levels = 2` keeps the r8 two-level
-    * path (O(N·√k)) for the AssignBench crossover comparison.
+    * path (O(N·√k)) for the r8 crossover comparison above.
     *
     * Returns (vec_id, v, cid). */
   def assignClusters(base: DataFrame, nCentroids: Int,

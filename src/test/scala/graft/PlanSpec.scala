@@ -11,22 +11,6 @@ class PlanSpec extends GraftSuite {
   private def plan(name: String): String =
     Queries.registry(name)(spark, sf).queryExecution.executedPlan.toString
 
-  /** Run `body` with the scale-adaptive scan floor (Tables.load,
-    * r15 optimization) OFF. The gates wrapped in this pin the plan
-    * shape of an AT-SCALE input — one with >= cores scan splits, where
-    * the floor's gate never fires — so the floor's degenerate-tiny-
-    * input repartition (a local-bench artifact by design) must not
-    * participate. The floor's own behavior is pinned by the
-    * "scan-parallelism floor" gate below. */
-  private def withoutScanFloor[T](body: => T): T = {
-    val prev = spark.conf.getOption("spark.graft.scanFloor")
-    spark.conf.set("spark.graft.scanFloor", "0")
-    try body finally prev match {
-      case Some(v) => spark.conf.set("spark.graft.scanFloor", v)
-      case None => spark.conf.unset("spark.graft.scanFloor")
-    }
-  }
-
   test("scan-parallelism floor: tiny scans repartition to cores on a " +
       "derived key, at-scale scans and disabled sessions do not") {
     // the floor (optimization guide §2.5: one small unsplittable input
@@ -37,33 +21,31 @@ class PlanSpec extends GraftSuite {
     // _best 1.9 s -> 3.4 s), (c) vanish when disabled or when the scan
     // already has >= floor splits
     // (d) r16: the width is sized by input volume (one partition per
-    // scanFloorBytesPerPart of on-disk parquet, capped at the floor),
+    // 96 KiB of on-disk parquet, capped at the floor),
     // not unconditionally cores — 32 near-empty partitions per table
     // load was the r15 driver's 32-core regression (VERDICT item 1)
-    spark.conf.set("spark.graft.scanFloor", "8")
-    spark.conf.set("spark.graft.scanFloorBytesPerPart", "1")
+    // Fixtures: sf0.1 documents.parquet is 594,568 bytes (width
+    // ceil(bytes / 96 KiB) = 7), sf0.001's is 65,515 bytes (width 1).
+    val sf01 = "/root/testdata/sf0.1"
+    def docsPlan(dir: String): String =
+      Tables.documents(spark, dir).queryExecution.executedPlan.toString
     try {
-      val p = Tables.documents(spark, sf).queryExecution.executedPlan.toString
-      assert(p.contains("Exchange hashpartitioning(xxhash64(doc_id"), p)
-      assert(p.contains(", 8)"), p)
-      // a volume budget larger than the file yields width 1 = no exchange
-      spark.conf.set("spark.graft.scanFloorBytesPerPart", s"${1L << 40}")
-      val p1 = Tables.documents(spark, sf).queryExecution.executedPlan.toString
-      assert(!p1.contains("Exchange"), p1)
-      // intermediate budget: width = ceil(bytes / budget), below the cap
-      val bytes = new java.io.File(s"$sf/documents.parquet").length
-      assert(bytes > 4, s"fixture documents.parquet unexpectedly tiny: $bytes")
-      val budget = (bytes + 3) / 4 // -> width 4 (< floor 8)
-      spark.conf.set("spark.graft.scanFloorBytesPerPart", budget.toString)
-      val p4 = Tables.documents(spark, sf).queryExecution.executedPlan.toString
+      // width sized by volume, below the cap
+      spark.conf.set("spark.graft.scanFloor", "8")
+      val p7 = docsPlan(sf01)
+      assert(p7.contains("Exchange hashpartitioning(xxhash64(doc_id"), p7)
+      assert(p7.contains(", 7)"), p7)
+      // width capped at the floor
+      spark.conf.set("spark.graft.scanFloor", "4")
+      val p4 = docsPlan(sf01)
       assert(p4.contains("Exchange hashpartitioning(xxhash64(doc_id"), p4)
       assert(p4.contains(", 4)"), p4)
-    } finally {
-      spark.conf.unset("spark.graft.scanFloor")
-      spark.conf.unset("spark.graft.scanFloorBytesPerPart")
-    }
-    withoutScanFloor {
-      val p = Tables.documents(spark, sf).queryExecution.executedPlan.toString
+      // a file under the per-partition budget yields width 1 = no exchange
+      val p1 = docsPlan(sf)
+      assert(!p1.contains("Exchange"), p1)
+    } finally spark.conf.unset("spark.graft.scanFloor")
+    Tables.noScanFloor(spark) {
+      val p = docsPlan(sf01)
       assert(!p.contains("Exchange"), p)
     }
   }
@@ -197,7 +179,7 @@ class PlanSpec extends GraftSuite {
     // adaptive plan: one documents scan, with ReusedExchange rows
     // pointing at the REPARTITION_BY_COL exchange.
     assert(spark.conf.get("spark.sql.adaptive.enabled") == "true")
-    withoutScanFloor {
+    Tables.noScanFloor(spark) {
       val df = Queries.registry("dedup_ngram_jaccard")(spark, sf)
       df.queryExecution.toRdd.count()
       val p = df.queryExecution.executedPlan.toString
@@ -236,7 +218,7 @@ class PlanSpec extends GraftSuite {
     // parser: the whole composite is ONE projection chain — a single
     // events scan, no Union, and the only exchange is the query's
     // final ORDER BY.
-    withoutScanFloor {
+    Tables.noScanFloor(spark) {
       val df = Queries.registry("default_network")(spark, sf)
       df.queryExecution.toRdd.count()
       val p = df.queryExecution.executedPlan.toString
@@ -257,7 +239,7 @@ class PlanSpec extends GraftSuite {
     // junctions with row-local bodies. A union compile re-scans events
     // once per branch; FusedBranches falls back to it silently, so pin
     // the fused shape.
-    withoutScanFloor {
+    Tables.noScanFloor(spark) {
       for (q <- Seq("app_parser", "route_junction", "config_pipeline_v3")) {
         val df = Queries.registry(q)(spark, sf)
         assert(df.queryExecution.optimizedPlan.collect {
@@ -405,7 +387,7 @@ class PlanSpec extends GraftSuite {
     // the codebook is driver-held; encoding must be a projection over
     // the scan — the ONLY exchange in either plan is the oracle's
     // final ORDER BY (embed_pq) / the top-k (ann_pq)
-    withoutScanFloor {
+    Tables.noScanFloor(spark) {
       val enc = plan("embed_pq")
       assert(enc.contains("pq_encode"), enc)
       assert(!enc.contains("SortMergeJoin") && !enc.contains("BroadcastHashJoin"), enc)
@@ -420,7 +402,7 @@ class PlanSpec extends GraftSuite {
     // index build = assign + residual-encode over a BROADCAST cells
     // table; search = pushed filter + compiled ADC + TakeOrdered — at
     // 100 TB the corpus must never hash-exchange
-    withoutScanFloor {
+    Tables.noScanFloor(spark) {
       val p = plan("ann_ivfpq")
       assert(p.contains("BroadcastHashJoin"), p)
       assert(p.contains("TakeOrderedAndProject"), p)
@@ -432,7 +414,7 @@ class PlanSpec extends GraftSuite {
   test("semantic decontamination: the decision rides the scan — no join, no shuffle") {
     // the benchmark side is expression-resident (NearestCentroidCos);
     // the only exchange is the oracle harness's final ORDER BY
-    withoutScanFloor {
+    Tables.noScanFloor(spark) {
       val p = plan("decontaminate_semantic")
       assert(p.contains("nearest_centroid_cos"), p)
       assert(!p.contains("Join"), p)
@@ -445,7 +427,7 @@ class PlanSpec extends GraftSuite {
     // only exchange is the oracle harness's ORDER BY (rangepartitioning),
     // which production never runs — at 100 TB chunking must stay a
     // map-only stage over the scan
-    withoutScanFloor {
+    Tables.noScanFloor(spark) {
       for (q <- Seq("text_chunking", "text_chunking_bpe")) {
         val p = plan(q)
         assert(p.contains("Generate explode"), s"$q\n$p")
@@ -502,7 +484,7 @@ class PlanSpec extends GraftSuite {
     // per-context synthetic generation = ONE groupBy(host) shuffle with
     // a partial aggregate below it; a window or cartesian here would be
     // the 100 TB scale-killer
-    withoutScanFloor {
+    Tables.noScanFloor(spark) {
       val p = plan("patterndb_synthetic")
       assert(!p.contains("Window"), p)
       assert(!p.contains("Cartesian"), p)
@@ -572,7 +554,7 @@ class PlanSpec extends GraftSuite {
     // the disk. The aggregate must stay (vec_id, cand)-skinny, with v
     // joined back afterwards (bit-identical assignments, gated by the
     // tree==flat equality specs).
-    withoutScanFloor {
+    Tables.noScanFloor(spark) {
       val base = Tables.embeddings(spark, sf)
         .select(col("vec_id"), col("embedding").as("v"))
       // expression regime (k <= fineExprMax): the ENTIRE assignment is
@@ -900,7 +882,7 @@ class PlanSpec extends GraftSuite {
     // collect_list-carrying queries still plan an ObjectHashAggregate
     // (TypedImperativeAgg — no hash-agg support exists for lists), but
     // it must sit ABOVE the exchange on the long (key, ordinal) pair.
-    withoutScanFloor {
+    Tables.noScanFloor(spark) {
     for (name <- Seq("grouping_by_session", "grouping_by_context_funcs",
         "grouping_by_having", "suppress")) {
       val full = plan(name)
