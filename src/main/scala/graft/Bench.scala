@@ -1,4 +1,5 @@
 package graft
+import org.apache.spark.sql.{DataFrame, SparkSession}
 import scala.util.control.NonFatal
 
 /** Benchmark main. Two layers (r7 verdict: the in-suite artifact alone
@@ -34,18 +35,20 @@ object Bench {
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
     val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
-    val spark = Harness.session(cpus)
-    // registry minus oracle-only forms, plus the production-hash-path
-    // variants: the bench measures what would run at 100 TB, while the
-    // oracle modes stay in Verify for external correctness
     // SPARK_GRAFT_ONLY=a,b,c restricts to named queries (child forks and
     // local iteration; the driver never sets it)
     val only = sys.env.get("SPARK_GRAFT_ONLY")
       .map(_.split(",").map(_.trim).filter(_.nonEmpty).toSet)
       .filter(_.nonEmpty) // an exported-but-empty var means "all"
-    val benched = (SparkEntry.queries.toSeq.sortBy(_._1)
-      .filterNot { case (n, _) => Queries.benchExcluded(n) } ++ Queries.benchOnly)
-      .filter { case (n, _) => only.forall(_.contains(n)) }
+    val benched = benchedQueries.filter { case (n, _) => only.forall(_.contains(n)) }
+    // a name that is not benched would time nothing and still publish
+    val unknown = only.fold(Seq.empty[String])(unbenched(_, benched.map(_._1)))
+    if (unknown.nonEmpty) {
+      System.err.println("[bench] SPARK_GRAFT_ONLY names queries the bench " +
+        "does not time: " + unknown.mkString(", "))
+      sys.exit(2)
+    }
+    val spark = Harness.session(cpus)
     // warm codegen/scan paths so timed numbers measure the queries,
     // not first-query JVM warmup (Harness.warmDirs)
     for (warmSf <- Harness.warmDirs) {
@@ -379,6 +382,18 @@ object Bench {
       if (!ok) { p.destroyForcibly(); None }
       else out.linesIterator.find(_.startsWith("{")).flatMap(childMedian(_, name))
     } catch { case NonFatal(_) => None }
+
+  /** What the bench times, in order: the registry minus oracle-only
+    * forms, plus the production-hash-path variants. The bench measures
+    * what would run at 100 TB; the oracle modes stay in Verify. */
+  def benchedQueries: Seq[(String, (SparkSession, String) => DataFrame)] =
+    SparkEntry.queries.toSeq.sortBy(_._1)
+      .filterNot { case (n, _) => Queries.benchExcluded(n) } ++ Queries.benchOnly
+
+  /** The names in `only` that `benched` lacks: a typo, or an
+    * oracle-only query ([[Queries.benchExcluded]]). */
+  def unbenched(only: Set[String], benched: Seq[String]): Seq[String] =
+    only.filterNot(benched.contains).toSeq.sorted
 
   private val queriesMap = "\"queries\":\\{([^}]*)\\}".r
 

@@ -1,9 +1,10 @@
 package graft
 
-import org.apache.spark.scheduler.{SparkListener, SparkListenerStageCompleted, SparkListenerTaskEnd}
+import org.apache.spark.graft.ListenerDrain
+import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart, SparkListenerStageCompleted, SparkListenerTaskEnd}
 import org.apache.spark.sql.{DataFrame, SparkSession}
-import org.apache.spark.sql.execution.{DataSourceScanExec, FormattedMode, SparkPlan}
-import org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanHelper
+import org.apache.spark.sql.execution.{DataSourceScanExec, ExplainUtils, FormattedMode, SparkPlan}
+import org.apache.spark.sql.execution.adaptive.{AdaptiveSparkPlanHelper, ShuffleQueryStageExec}
 import org.apache.spark.sql.execution.exchange.{Exchange, ReusedExchangeExec}
 import scala.collection.mutable
 
@@ -20,10 +21,14 @@ import scala.collection.mutable
   * the formatted plan (then AQE's final plan, with runtime join
   * strategy changes, not the static estimate):
   *  - build, plan and run ms (DataFrame construction; analysis,
-  *    optimization and physical planning; `toRdd.count`);
+  *    optimization and physical planning; `toRdd.count`), and
+  *    `build_jobs`, the Spark jobs submitted while building;
   *  - one row per stage run while building, planning or running,
   *    heaviest first: tasks, summed executor run time, median and max
-  *    task duration (ms), shuffle read/write, spill and input KiB;
+  *    task duration (ms), shuffle read/write, spill and input KiB, and
+  *    the stage's name; a stage that writes a shuffle of the final
+  *    plan is named by its exchange, `Exchange (N)`, N being the
+  *    exchange's id in the formatted plan;
   *  - the Exchange, ReusedExchange and file-scan node counts of the
   *    final plan, subqueries included.
   *
@@ -37,6 +42,7 @@ object Explain extends AdaptiveSparkPlanHelper {
 
   private final class StageAgg {
     var name = ""
+    var shuffleId: Option[Int] = None
     var tasks = 0
     val taskMs = mutable.ArrayBuffer.empty[Long]
     var runMs = 0L
@@ -46,9 +52,14 @@ object Explain extends AdaptiveSparkPlanHelper {
     var inputB = 0L
   }
 
-  /** Per-stage task metrics of every job run while it is registered. */
+  /** Per-stage task metrics, and the count, of every job run while it
+    * is registered. */
   private final class StageListener extends SparkListener {
     val stages = mutable.LinkedHashMap.empty[Int, StageAgg]
+    var jobs = 0
+    override def onJobStart(e: SparkListenerJobStart): Unit = synchronized {
+      jobs += 1
+    }
     override def onTaskEnd(e: SparkListenerTaskEnd): Unit = synchronized {
       val a = stages.getOrElseUpdate(e.stageId, new StageAgg)
       a.tasks += 1
@@ -64,8 +75,9 @@ object Explain extends AdaptiveSparkPlanHelper {
     }
     override def onStageCompleted(e: SparkListenerStageCompleted): Unit =
       synchronized {
-        stages.getOrElseUpdate(e.stageInfo.stageId, new StageAgg).name =
-          e.stageInfo.name
+        val a = stages.getOrElseUpdate(e.stageInfo.stageId, new StageAgg)
+        a.name = e.stageInfo.name
+        a.shuffleId = ListenerDrain.shuffleDepId(e.stageInfo)
       }
   }
 
@@ -76,6 +88,20 @@ object Explain extends AdaptiveSparkPlanHelper {
     (nodes.count(_.isInstanceOf[Exchange]),
       nodes.count(_.isInstanceOf[ReusedExchangeExec]),
       nodes.count(_.isInstanceOf[DataSourceScanExec]))
+  }
+
+  /** Shuffle id -> `Exchange (N)` for each shuffle stage of an AQE final
+    * plan, N being the exchange's operator id in the formatted plan.
+    * Operator ids exist only while `ExplainUtils.processPlan` runs, so
+    * they are read in its first output callback. */
+  private def exchangeLabels(plan: SparkPlan): Map[Int, String] = {
+    val stages = collectWithSubqueries(plan) { case s: ShuffleQueryStageExec => s }
+      .filterNot(_.plan.isInstanceOf[ReusedExchangeExec])
+    var labels = Map.empty[Int, String]
+    ExplainUtils.processPlan[SparkPlan](plan, _ =>
+      if (labels.isEmpty) labels = stages.map(s =>
+        s.shuffle.shuffleId -> s"Exchange (${ExplainUtils.getOpId(s.plan)})").toMap)
+    labels
   }
 
   /** Warm `fn` up, then build, plan and run it once at `sfDir` in the
@@ -89,16 +115,20 @@ object Explain extends AdaptiveSparkPlanHelper {
     val t0 = System.nanoTime()
     val df = Harness.benchShape(fn(spark, sfDir))
     val t1 = System.nanoTime()
-    df.queryExecution.executedPlan
+    // listener events arrive asynchronously on the listener bus
+    ListenerDrain.waitUntilEmpty(spark.sparkContext)
+    val buildJobs = listener.synchronized(listener.jobs)
     val t2 = System.nanoTime()
-    df.queryExecution.toRdd.count()
+    df.queryExecution.executedPlan
     val t3 = System.nanoTime()
-    // task-end events arrive asynchronously on the listener bus
-    org.apache.spark.graft.ListenerDrain.waitUntilEmpty(spark.sparkContext)
+    df.queryExecution.toRdd.count()
+    val t4 = System.nanoTime()
+    ListenerDrain.waitUntilEmpty(spark.sparkContext)
     spark.sparkContext.removeSparkListener(listener)
+    val labels = exchangeLabels(df.queryExecution.executedPlan)
     println(s"===== $name exec =====")
-    println(f"build ${(t1 - t0) / 1e6}%.1f ms  plan ${(t2 - t1) / 1e6}%.1f ms  " +
-      f"run ${(t3 - t2) / 1e6}%.1f ms")
+    println(f"build ${(t1 - t0) / 1e6}%.1f ms  plan ${(t3 - t2) / 1e6}%.1f ms  " +
+      f"run ${(t4 - t3) / 1e6}%.1f ms  build_jobs $buildJobs")
     println(f"${"stage"}%6s ${"tasks"}%6s ${"task_ms"}%9s ${"med_ms"}%7s " +
       f"${"max_ms"}%7s ${"shuf_rd_kb"}%11s ${"shuf_wr_kb"}%11s " +
       f"${"spill_kb"}%9s ${"input_kb"}%9s  name")
@@ -109,7 +139,7 @@ object Explain extends AdaptiveSparkPlanHelper {
       println(f"$id%6d ${a.tasks}%6d ${a.runMs}%9d $med%7d $mx%7d " +
         f"${a.shuffleReadB / 1024}%11d ${a.shuffleWriteB / 1024}%11d " +
         f"${a.spillB / 1024}%9d ${a.inputB / 1024}%9d  " +
-        a.name.takeWhile(_ != '('))
+        a.shuffleId.flatMap(labels.get).getOrElse(a.name.takeWhile(_ != '(')))
     }
     val (exchanges, reused, scans) = census(df.queryExecution.executedPlan)
     println(s"exchanges $exchanges  reused $reused  scans $scans")

@@ -23,8 +23,7 @@ import org.apache.spark.sql.functions._
 object Queries {
   case class Q(name: String,
       fn: (SparkSession, String) => DataFrame,
-      oracle: Option[String],
-      bench: Boolean = false)
+      oracle: Option[String])
 
   private def dec(c: Column): Column = c.cast("decimal(18,2)")
 
@@ -50,8 +49,7 @@ object Queries {
       CAST(SUM(CAST(l_extendedprice AS DECIMAL(18,2)) * (CAST(1 AS DECIMAL(18,2)) - CAST(l_discount AS DECIMAL(18,2)))) AS DOUBLE) AS sum_disc_price,
       COUNT(*) AS count_order
       FROM lineitem GROUP BY l_returnflag, l_linestatus
-      ORDER BY l_returnflag, l_linestatus"""),
-    bench = true)
+      ORDER BY l_returnflag, l_linestatus"""))
 
   // ---------------------------------------------------------------------
   // Filters (SURVEY §2.3): severity/facility class predicates
@@ -91,8 +89,7 @@ object Queries {
     Some("""SELECT n_name, COUNT(*) AS n_events,
       CAST(SUM(CAST(value AS DECIMAL(18,2))) AS DOUBLE) AS sum_value
       FROM events JOIN nation ON CAST(user_id % 25 AS INT) = n_nationkey
-      GROUP BY n_name ORDER BY n_name"""),
-    bench = true)
+      GROUP BY n_name ORDER BY n_name"""))
 
   // ---------------------------------------------------------------------
   // Filters (SURVEY §2.3): regex match, netmask, in-list semi-join
@@ -245,8 +242,7 @@ object Queries {
       strftime(ts, '%b') || ' ' || lpad(CAST(day(ts) AS VARCHAR), 2, ' ')
       || ' ' || strftime(ts, '%H:%M:%S') || ' h' || user_id || ' ' ||
       event_type || ': u=' || user_id AS line
-      FROM events ORDER BY event_id"""),
-    bench = true)
+      FROM events ORDER BY event_id"""))
 
   private val templateFuncs = Q("template_funcs",
     (s, d) => {
@@ -320,8 +316,7 @@ object Queries {
       'h' || user_id AS host, event_type AS program,
       CAST(event_id % 1000 AS STRING) AS pid, 'u=' || user_id AS message,
       CAST(epoch_ns(ts) // 1000000000 AS BIGINT) AS ts_sec
-      FROM events ORDER BY event_id"""),
-    bench = true)
+      FROM events ORDER BY event_id"""))
 
   private val parseSyslogRfc5424 = Q("parse_syslog_rfc5424",
     (s, d) => {
@@ -350,8 +345,7 @@ object Queries {
       regexp_extract(props, '"k": (\d+)', 1) AS sd_k,
       'u=' || user_id AS message,
       CAST(epoch_ns(ts) // 1000 AS BIGINT) AS ts_us
-      FROM events ORDER BY event_id"""),
-    bench = true)
+      FROM events ORDER BY event_id"""))
 
   /** STRICT RFC5424 (r9): `flags(syslog-protocol)` — the reference's
     * log_msg_parse_syslog_proto with field caps and parse-error
@@ -477,8 +471,7 @@ object Queries {
       'u' || user_id AS username,
       '10.0.' || (user_id % 256) || '.' || (event_id % 256) AS client_addr,
       CAST(1000 + event_id % 1000 AS STRING) AS port
-      FROM events ORDER BY event_id"""),
-    bench = true)
+      FROM events ORDER BY event_id"""))
 
   /** PROGRAM-scoped patterndb classification ([[graft.functions
     * .PdbClassify]] — `pdb_ruleset_lookup`, pdb-ruleset.c:85-134): the
@@ -651,8 +644,7 @@ object Queries {
         WHEN 2 THEN 'fw' || user_id WHEN 3 THEN '/bin/ls -la /tmp/f' || event_id
         WHEN 4 THEN 'TCP' WHEN 5 THEN 'u' || user_id WHEN 6 THEN 'w' || event_id
         ELSE NULL END AS evidence
-      FROM events ORDER BY event_id"""),
-    bench = true)
+      FROM events ORDER BY event_id"""))
 
   private val enrichGlob = Q("enrich_glob",
     (s, d) => {
@@ -1297,8 +1289,7 @@ object Queries {
         count(*) AS n,
         CAST(SUM(CAST(value AS DECIMAL(18,2))) AS DOUBLE) AS sum_value,
         string_agg(event_type, ',' ORDER BY ts, event_id) AS types
-      FROM sessed GROUP BY user_id, sess ORDER BY user_id, start_us"""),
-    bench = true)
+      FROM sessed GROUP BY user_id, sess ORDER BY user_id, start_us"""))
 
   private val groupingByHaving = Q("grouping_by_having",
     (s, d) => {
@@ -1538,8 +1529,7 @@ object Queries {
         GROUP BY 1, 2, 3, 4)
       SELECT id_a, id_b, CAST(common AS DOUBLE) / (n_a + n_b - common) AS jaccard
       FROM pairs WHERE CAST(common AS DOUBLE) / (n_a + n_b - common) >= 0.5
-      ORDER BY id_a, id_b"""),
-    bench = true)
+      ORDER BY id_a, id_b"""))
 
   /** Incremental MinHash/LSH admission (the rolling-crawl shape): the
     * wave = doc_id % 10 == 0, the corpus = everything else; a wave doc
@@ -1596,8 +1586,7 @@ object Queries {
       SELECT doc_id FROM documents
       WHERE doc_id % 10 = 0
         AND doc_id NOT IN (SELECT id_a FROM jacc WHERE jaccard >= 0.7)
-      ORDER BY doc_id"""),
-    bench = true)
+      ORDER BY doc_id"""))
 
   /** MinHash/LSH with the oracle-replicable hash family (md5p31) and
     * verbatim band keys: DuckDB recomputes signatures, band keys,
@@ -1641,8 +1630,7 @@ object Queries {
         JOIN sh sa ON sa.doc_id = c.id_a
         JOIN sh sb ON sb.doc_id = c.id_b)
       SELECT id_a, id_b, jaccard FROM j WHERE jaccard >= 0.7
-      ORDER BY id_a, id_b"""),
-    bench = true)
+      ORDER BY id_a, id_b"""))
 
   /** SimHash near-dup pairs. Banding into maxHamming+1 chunks makes the
     * banded+verified result provably EQUAL to brute force (pigeonhole),
@@ -1706,8 +1694,7 @@ object Queries {
         CAST(bit_count(xor(a.lo, b.lo)) + bit_count(xor(a.hi, b.hi)) AS INT) AS hamming
       FROM sigs a JOIN sigs b ON a.doc_id < b.doc_id
       WHERE bit_count(xor(a.lo, b.lo)) + bit_count(xor(a.hi, b.hi)) <= 3
-      ORDER BY id_a, id_b"""),
-    bench = true)
+      ORDER BY id_a, id_b"""))
 
   /** The scale-safe form of radius-8 simhash: 128-bit signature, 9
     * pigeonhole chunks of ~14 bits (16k-value key space instead of the
@@ -1745,8 +1732,7 @@ object Queries {
       FROM sigs a JOIN sigs b ON a.doc_id < b.doc_id
       WHERE bit_count(xor(a.q0, b.q0)) + bit_count(xor(a.q1, b.q1))
           + bit_count(xor(a.q2, b.q2)) + bit_count(xor(a.q3, b.q3)) <= 8
-      ORDER BY id_a, id_b"""),
-    bench = true)
+      ORDER BY id_a, id_b"""))
 
   /** Near-dup CLUSTERS: connected components over the r=3 simhash
     * pairs — the step between pairwise output and dropping documents.
@@ -1791,8 +1777,7 @@ object Queries {
         UNION
         SELECT r.id, e.dst FROM r JOIN edges e ON r.l = e.src
       )
-      SELECT id, min(l) AS component FROM r GROUP BY id ORDER BY id"""),
-    bench = true)
+      SELECT id, min(l) AS component FROM r GROUP BY id ORDER BY id"""))
 
   /** Leakage-safe split (r8): same md5-simhash near-dup clusters as
     * dedup_cc, split 8/1/1 by md5(cluster) against exact 2^128-scaled
@@ -1848,8 +1833,7 @@ object Queries {
              WHEN md5(CAST(cluster AS VARCHAR))
                < 'e6666666666666666666666666666666' THEN 'val'
              ELSE 'test' END AS split
-      FROM labeled ORDER BY doc_id"""),
-    bench = true)
+      FROM labeled ORDER BY doc_id"""))
 
   /** Quality-aware dedup survivor selection: same clusters as dedup_cc,
     * then keep the longest member per cluster (ties → min id). The
@@ -1977,8 +1961,7 @@ object Queries {
       SELECT vec_id,
         string_agg(CAST(j AS VARCHAR), '_' ORDER BY m) AS codes,
         list_sum(list(dist ORDER BY m)) / 64 AS mse
-      FROM best WHERE rn = 1 GROUP BY vec_id ORDER BY vec_id"""),
-    bench = true)
+      FROM best WHERE rn = 1 GROUP BY vec_id ORDER BY vec_id"""))
 
   /** One Lloyd iteration as DuckDB CTEs (embed_pq_trained oracle): from
     * codebook `cbIn`, assignment = per-subspace squared-L2 argmin
@@ -2049,8 +2032,7 @@ object Queries {
       SELECT vec_id,
         string_agg(CAST(j AS VARCHAR), '_' ORDER BY m) AS codes,
         list_sum(list(dist ORDER BY m)) / 64 AS mse
-      FROM bestF WHERE rn = 1 GROUP BY vec_id ORDER BY vec_id"""),
-    bench = true)
+      FROM bestF WHERE rn = 1 GROUP BY vec_id ORDER BY vec_id"""))
 
   /** PQ asymmetric-distance top-k (r8): the oracle rebuilds codebook +
     * codes (embed_pq CTEs), the query's per-subspace LUT, and the
@@ -2089,8 +2071,7 @@ object Queries {
         FROM best b JOIN lut l ON b.m = l.m AND b.j = l.j
         WHERE b.rn = 1 GROUP BY b.vec_id
       )
-      SELECT vec_id, adc FROM adc ORDER BY adc ASC, vec_id ASC LIMIT 10"""),
-    bench = true)
+      SELECT vec_id, adc FROM adc ORDER BY adc ASC, vec_id ASC LIMIT 10"""))
 
   /** IVF-PQ ANN (r9): coarse-cell probe + per-cell residual-PQ ADC —
     * the oracle replays the ENTIRE index: cell sample, cosine-argmax
@@ -2163,8 +2144,7 @@ object Queries {
       SELECT c.vec_id, list_sum(list(l.ld ORDER BY c.m)) AS adc
       FROM codes c JOIN lut l ON c.cid = l.cid AND c.m = l.m AND c.j = l.j
       GROUP BY c.vec_id
-      ORDER BY adc ASC, vec_id ASC LIMIT 10"""),
-    bench = true)
+      ORDER BY adc ASC, vec_id ASC LIMIT 10"""))
 
   private val annBruteForce = Q("ann_brute_force",
     (s, d) => Similarity.bruteForceTopK(Tables.embeddings(s, d),
@@ -2176,8 +2156,7 @@ object Queries {
           (sqrt(list_dot_product(CAST(embedding AS DOUBLE[]), CAST(embedding AS DOUBLE[]))) *
            sqrt(list_dot_product(qv, qv))) AS cos
         FROM embeddings, q)
-      SELECT vec_id, cos FROM scored ORDER BY cos DESC, vec_id LIMIT 10"""),
-    bench = true)
+      SELECT vec_id, cos FROM scored ORDER BY cos DESC, vec_id LIMIT 10"""))
 
   /** Single-probe LSH top-k: the oracle recomputes every vector's bucket
     * and the query's bucket from the same md5-derived hyperplanes and
@@ -2409,8 +2388,7 @@ object Queries {
         CAST(coalesce(a.dc, 0) AS INT) AS distinct_chars,
         CAST(coalesce(a.coll, 0) AS BIGINT) AS collision
       FROM documents d LEFT JOIN agg a ON d.doc_id = a.doc_id
-      ORDER BY d.doc_id"""),
-    bench = true)
+      ORDER BY d.doc_id"""))
 
   private val textLangid = Q("text_langid",
     (s, d) => {
@@ -2520,8 +2498,7 @@ object Queries {
       ), ${(1 to 16).map(bpeApplySql).mkString(", ")}
       SELECT doc_id, CAST(COUNT(*) AS BIGINT) AS n_pieces,
         CAST(SUM(len(string_split(w, chr(1)))) AS BIGINT) AS n_subwords
-      FROM a16 GROUP BY doc_id ORDER BY doc_id"""),
-    bench = true)
+      FROM a16 GROUP BY doc_id ORDER BY doc_id"""))
 
   private val textQualityFilter = Q("text_quality_filter",
     (s, d) => Tables.documents(s, d)
@@ -2598,8 +2575,7 @@ object Queries {
       )
       SELECT doc_id, count(*) AS n_contaminated
       FROM dg JOIN bg USING (gram)
-      GROUP BY doc_id ORDER BY doc_id"""),
-    bench = true)
+      GROUP BY doc_id ORDER BY doc_id"""))
 
   /** Per-doc contamination ratio + threshold drop — one left-join
     * aggregation yields total and contaminated distinct-gram counts
@@ -2730,8 +2706,7 @@ object Queries {
         r.sid AS signup_event_id, r.rt AS signup_ts_us
       FROM l ASOF LEFT JOIN r
         ON l.user_id = r.user_id AND l.t >= r.rt
-      ORDER BY l.event_id"""),
-    bench = true)
+      ORDER BY l.event_id"""))
 
   /** Apache access-log parsing end-to-end: combined-format lines are
     * synthesized deterministically from event fields, parsed back by
@@ -2769,8 +2744,7 @@ object Queries {
       CAST(200 + event_id % 5 AS VARCHAR) AS response,
       CAST(event_id % 10000 AS VARCHAR) AS bytes,
       971211336 AS ts_epoch
-      FROM events ORDER BY event_id"""),
-    bench = true)
+      FROM events ORDER BY event_id"""))
 
   /** Gopher-style repetition signals over word n-grams: top-bigram char
     * coverage, duplicated-trigram occurrence fraction, type-token
@@ -2823,8 +2797,7 @@ object Queries {
       FROM toks t
       LEFT JOIN topb ON t.doc_id = topb.doc_id
       LEFT JOIN dup ON t.doc_id = dup.doc_id
-      ORDER BY t.doc_id"""),
-    bench = true)
+      ORDER BY t.doc_id"""))
 
   /** PII redaction over synthesized PII-bearing text (the events table
     * carries no real PII, so the query constructs emails / IPs / card
@@ -2903,8 +2876,7 @@ object Queries {
         FROM tf JOIN dfq USING (term) CROSS JOIN n
       )
       SELECT doc_id, term, tf, df, score, rank
-      FROM s WHERE rank <= 3 ORDER BY doc_id, rank"""),
-    bench = true)
+      FROM s WHERE rank <= 3 ORDER BY doc_id, rank"""))
 
   /** Training-shard packing: id-ordered documents fill ~2000-token
     * shards via a distributed two-level prefix sum (bucketed partial
@@ -2926,8 +2898,7 @@ object Queries {
           ROWS BETWEEN UNBOUNDED PRECEDING AND 1 PRECEDING), 0) AS BIGINT) AS start_tokens,
         CAST(coalesce(sum(n_tokens) OVER (ORDER BY doc_id
           ROWS BETWEEN UNBOUNDED PRECEDING AND 1 PRECEDING), 0) // 2000 AS BIGINT) AS shard
-      FROM t ORDER BY doc_id"""),
-    bench = true)
+      FROM t ORDER BY doc_id"""))
 
   /** Cross-document duplicated k-token spans (window-level exact-dup
     * signal). Spark probes xxhash64'd window postings against the
@@ -2951,8 +2922,7 @@ object Queries {
       )
       SELECT doc_id, count(*) AS n_dup_spans
       FROM g JOIN d USING (gram)
-      GROUP BY doc_id ORDER BY doc_id"""),
-    bench = true)
+      GROUP BY doc_id ORDER BY doc_id"""))
 
   // ---------------------------------------------------------------------
   // C4-style corpus-wide duplicate-line removal: documents are recut
@@ -2990,8 +2960,7 @@ object Queries {
       )
       SELECT doc_id, string_agg(line, chr(10) ORDER BY line_no) AS text
       FROM ranked WHERE rn = 1
-      GROUP BY doc_id ORDER BY doc_id"""),
-    bench = true)
+      GROUP BY doc_id ORDER BY doc_id"""))
 
   // ---------------------------------------------------------------------
   // corpus-frequency boilerplate removal: same deterministic 5-word
@@ -3108,8 +3077,7 @@ object Queries {
       SELECT doc_id, count(*) AS n_tokens,
         cast(sum(oov) AS bigint) AS oov,
         cast(sum(bits) AS double) / count(*) AS freq_bits_avg
-      FROM scored GROUP BY doc_id ORDER BY doc_id"""),
-    bench = true)
+      FROM scored GROUP BY doc_id ORDER BY doc_id"""))
 
   /** Bigram LM surprisal (r8) — the LM quality signal integerized for
     * exact external verification: the oracle rebuilds both top-K
@@ -3155,8 +3123,7 @@ object Queries {
         cast(sum(CASE WHEN bcnt IS NULL THEN ubits + 1
           ELSE greatest(0, ubits - length(bin(bcnt))) END) AS double)
           / count(*) AS surprisal_bits_avg
-      FROM scored GROUP BY doc_id ORDER BY doc_id"""),
-    bench = true)
+      FROM scored GROUP BY doc_id ORDER BY doc_id"""))
 
   /** CCNet head/middle/tail buckets (r9): sampled surprisal cutpoints
     * (t1 = sorted-sample[floor(S/3)], t2 = [floor(2S/3)]) + one narrow
@@ -3242,8 +3209,7 @@ object Queries {
         array_to_string(ws[k * 24 + 1 : least(k * 24 + 32, len(ws))], ' ')
           AS chunk_text
       FROM toks, unnest(range(0, greatest(0, (len(ws) - 8 - 1) // 24) + 1)) AS t(k)
-      ORDER BY doc_id, chunk_idx"""),
-    bench = true)
+      ORDER BY doc_id, chunk_idx"""))
 
   /** BPE-token-aware chunking (r9): same window contract as
     * text_chunking but cut on MODEL tokens (the GPT-2-style
@@ -3269,8 +3235,7 @@ object Queries {
         array_to_string(ws[k * 24 + 1 : least(k * 24 + 32, len(ws))], '')
           AS chunk_text
       FROM toks, unnest(range(0, greatest(0, (len(ws) - 8 - 1) // 24) + 1)) AS t(k)
-      ORDER BY doc_id, chunk_idx"""),
-    bench = true)
+      ORDER BY doc_id, chunk_idx"""))
 
   /** BPE-token-aware packing (r9): text_pack_sequences' two-level
     * prefix sum over MODEL-token counts instead of whitespace words. */
@@ -3298,8 +3263,7 @@ object Queries {
         greatest(s * 64, strt) - strt AS tok_from,
         least((s + 1) * 64, strt + n) - greatest(s * 64, strt) AS n_tokens
       FROM st, unnest(range(strt // 64, (strt + n - 1) // 64 + 1)) AS t(s)
-      ORDER BY doc_id, seq_id"""),
-    bench = true)
+      ORDER BY doc_id, seq_id"""))
 
   /** Hashed linear classifier scoring (r8): fastText-shaped quality
     * model application — unigram+bigram hashing-trick features, a
@@ -3324,8 +3288,7 @@ object Queries {
         CAST(COALESCE(list_sum(list_transform(fs,
           f -> (CAST(('0x' || substring(md5(f), 1, 6)) AS BIGINT) % 4096)
             % 7 - 3)), 0) AS BIGINT) AS score
-      FROM feats ORDER BY doc_id"""),
-    bench = true)
+      FROM feats ORDER BY doc_id"""))
 
   /** Multi-label classifier head (r9): argmax over 3 label scores —
     * same hashing-trick features as text_classifier_score, one
@@ -3360,8 +3323,7 @@ object Queries {
       SELECT doc_id, n_feats, score_0, score_1, score_2,
         CAST(CASE WHEN score_0 >= score_1 AND score_0 >= score_2 THEN 0
                   WHEN score_1 >= score_2 THEN 1 ELSE 2 END AS INT) AS label
-      FROM scored ORDER BY doc_id"""),
-    bench = true)
+      FROM scored ORDER BY doc_id"""))
 
   /** Target-mixture sampling (r8): derive per-domain acceptance rates
     * from target ppm weights + actual counts (integer-exact), sample
@@ -3454,8 +3416,7 @@ object Queries {
         greatest(s * 64, strt) - strt AS tok_from,
         least((s + 1) * 64, strt + n) - greatest(s * 64, strt) AS n_tokens
       FROM st, unnest(range(strt // 64, (strt + n - 1) // 64 + 1)) AS t(s)
-      ORDER BY doc_id, seq_id"""),
-    bench = true)
+      ORDER BY doc_id, seq_id"""))
 
   private val textFingerprint = Q("text_fingerprint",
     (s, d) => Tables.documents(s, d)
@@ -3528,8 +3489,7 @@ object Queries {
       CAST(CASE WHEN doc_id % 4 = 3 THEN 8000 + (doc_id % 6) * 8000 ELSE -1 END AS INT) AS sample_rate,
       CAST(CASE WHEN doc_id % 4 = 3 THEN 1 + doc_id % 2 ELSE -1 END AS INT) AS channels,
       CAST(CASE WHEN doc_id % 4 = 3 THEN 16 ELSE -1 END AS INT) AS bits_per_sample
-      FROM documents ORDER BY media_id"""),
-    bench = true)
+      FROM documents ORDER BY media_id"""))
 
   /** Pixel/sample-level decode — the r6 stub, retired: PNG pixels come
     * back through chunk-CRC validation, zlib inflate and all five
@@ -3555,8 +3515,7 @@ object Queries {
       CAST(CASE WHEN doc_id % 2 = 0
         THEN ((15 + doc_id % 97) + (15 + doc_id % 53)) / 2.0
         ELSE doc_id % 100 + 31.5 END AS DOUBLE) AS vmean
-      FROM documents ORDER BY media_id"""),
-    bench = true)
+      FROM documents ORDER BY media_id"""))
 
   /** Audio features (r9): energy / peak / zero-crossings / mean over
     * REAL decoded PCM (the RIFF walk + 16-bit samples) — the fixture
@@ -3583,8 +3542,7 @@ object Queries {
         CAST(len(list_filter(range(1, 64),
           i -> v[i] * v[i + 1] < 0)) AS BIGINT) AS zcr,
         CAST(list_sum(v) AS DOUBLE) / 64 AS vmean
-      FROM sm ORDER BY media_id"""),
-    bench = true)
+      FROM sm ORDER BY media_id"""))
 
   /** GIF pixel decode (r8 — GIF's LZW joins PNG/WAV as a real codec
     * layer): the fixture pattern is closed-form in doc_id exactly like
@@ -3605,8 +3563,7 @@ object Queries {
       CAST(0 AS BIGINT) AS vmin,
       CAST((15 + doc_id % 97) + (15 + doc_id % 53) AS BIGINT) AS vmax,
       CAST(((15 + doc_id % 97) + (15 + doc_id % 53)) / 2.0 AS DOUBLE) AS vmean
-      FROM documents ORDER BY media_id"""),
-    bench = true)
+      FROM documents ORDER BY media_id"""))
 
   /** Video column metadata: ISO-BMFF box walk (mvhd timescale/duration,
     * tkhd 16.16 presentation size) — the container layer of a video
@@ -3676,8 +3633,7 @@ object Queries {
           lpad(to_hex(rb[6]), 2, '0'), lpad(to_hex(rb[5]), 2, '0'),
           lpad(to_hex(rb[4]), 2, '0'), lpad(to_hex(rb[3]), 2, '0'),
           lpad(to_hex(rb[2]), 2, '0'), lpad(to_hex(rb[1]), 2, '0'))) AS dhash
-      FROM rowbytes ORDER BY media_id"""),
-    bench = true)
+      FROM rowbytes ORDER BY media_id"""))
 
   /** Perceptual image dedup, part 2 — near-duplicate pairs at Hamming
     * ≤ 3 via 4×16-bit pigeonhole banding (exact: 3 flipped bits leave
@@ -3729,8 +3685,7 @@ object Queries {
       WHERE x.doc_id < y.doc_id
         AND list_sum(list_transform(range(0, 8),
           i -> bit_count(xor(x.rb[i+1], y.rb[i+1])))) <= 3
-      ORDER BY id_a, id_b"""),
-    bench = true)
+      ORDER BY id_a, id_b"""))
 
   /** Audio perceptual fingerprint — gain-invariant energy dHash over
     * REAL decoded PCM (65-window tiling, integer cross-multiplied
@@ -3776,8 +3731,7 @@ object Queries {
           lpad(to_hex(rb[6]), 2, '0'), lpad(to_hex(rb[5]), 2, '0'),
           lpad(to_hex(rb[4]), 2, '0'), lpad(to_hex(rb[3]), 2, '0'),
           lpad(to_hex(rb[2]), 2, '0'), lpad(to_hex(rb[1]), 2, '0'))) AS ahash
-      FROM bytes8 ORDER BY media_id"""),
-    bench = true)
+      FROM bytes8 ORDER BY media_id"""))
 
   /** Multimodal decontamination — benchmark-image leakage gate: drop
     * corpus images perceptually equal (dHash Hamming ≤ 3) to any eval
@@ -3832,8 +3786,7 @@ object Queries {
           row_number() OVER (PARTITION BY media_id
             ORDER BY hamming, benchmark_id) AS rn
         FROM matches WHERE hamming <= 3) WHERE rn = 1
-      ORDER BY media_id"""),
-    bench = true)
+      ORDER BY media_id"""))
 
   /** Cluster-level image dedup — the end-to-end wiring the image family
     * was missing (r9 verdict #6): [[Multimodal.imageDHashPairs]] PAIRS
@@ -3915,8 +3868,7 @@ object Queries {
       SELECT id, component, score,
         (row_number() OVER (PARTITION BY component
           ORDER BY score DESC, id) = 1) AS keep
-      FROM scored ORDER BY id"""),
-    bench = true)
+      FROM scored ORDER BY id"""))
 
   /** Shared CTE chain replaying the video fixtures analytically: per
     * (doc, frame) 8 dHash row-bytes (`frb`), then per clip the
@@ -3996,8 +3948,7 @@ object Queries {
           lpad(to_hex(vb[4]), 2, '0'), lpad(to_hex(vb[3]), 2, '0'),
           lpad(to_hex(vb[2]), 2, '0'), lpad(to_hex(vb[1]), 2, '0'))) AS vhash,
         tsig
-      FROM vclip ORDER BY media_id"""),
-    bench = true)
+      FROM vclip ORDER BY media_id"""))
 
   /** The oracle's replay of [[Multimodal.tsigAligned]]: clips `x`,`y`
     * (rows of `vclip` with nf + tsig) match time-wise when some
@@ -4041,8 +3992,7 @@ object Queries {
       WHERE x.doc_id < y.doc_id AND ${tsigAlignedSql("x", "y")}
         AND list_sum(list_transform(range(0, 8),
           i -> bit_count(xor(x.vb[i+1], y.vb[i+1])))) <= 3
-      ORDER BY id_a, id_b"""),
-    bench = true)
+      ORDER BY id_a, id_b"""))
 
   /** Cluster-level video dedup — the video column of the modality
     * matrix completed (r10 verdict #2): [[Multimodal.videoDHashPairs]]
@@ -4094,8 +4044,7 @@ object Queries {
       SELECT id, component, score,
         (row_number() OVER (PARTITION BY component
           ORDER BY score DESC, id) = 1) AS keep
-      FROM vscored ORDER BY id"""),
-    bench = true)
+      FROM vscored ORDER BY id"""))
 
   /** Video-side benchmark decontamination — the modality matrix's
     * decontaminate column for video: drop corpus clips whose majority
@@ -4127,8 +4076,7 @@ object Queries {
           row_number() OVER (PARTITION BY media_id
             ORDER BY hamming, benchmark_id) AS rn
         FROM vmatches) WHERE rn = 1
-      ORDER BY media_id"""),
-    bench = true)
+      ORDER BY media_id"""))
 
   /** Audio-side benchmark decontamination — the decontaminate column
     * for audio: the eval copies are re-mastered at 3× gain (different
@@ -4184,8 +4132,7 @@ object Queries {
           row_number() OVER (PARTITION BY media_id
             ORDER BY hamming, benchmark_id) AS rn
         FROM amatches) WHERE rn = 1
-      ORDER BY media_id"""),
-    bench = true)
+      ORDER BY media_id"""))
 
   /** Cluster-level audio dedup — the audio column of the modality
     * matrix completed (r10 verdict #2): [[Multimodal.audioEnergyHashPairs]]
@@ -4260,8 +4207,7 @@ object Queries {
       SELECT id, component, score,
         (row_number() OVER (PARTITION BY component
           ORDER BY score DESC, id) = 1) AS keep
-      FROM ascored ORDER BY id"""),
-    bench = true)
+      FROM ascored ORDER BY id"""))
 
   private val multimodalStub = Q("multimodal_stub",
     (s, d) => {
@@ -4341,8 +4287,7 @@ object Queries {
         WHEN 3 THEN 'u' || user_id
         WHEN 4 THEN 'search'
         WHEN 5 THEN 'TCP FIN' END AS evidence
-      FROM events ORDER BY event_id"""),
-    bench = true)
+      FROM events ORDER BY event_id"""))
 
   // ---------------------------------------------------------------------
   // All queries
@@ -4391,7 +4336,6 @@ object Queries {
     all.map(q => q.name -> q.fn).toMap
   val oracles: Map[String, String] =
     all.flatMap(q => q.oracle.map(q.name -> _)).toMap
-  val benchNames: Seq[String] = all.filter(_.bench).map(_.name)
 
   /** Bench-only PRODUCTION-path variants: the xxh64 hash family and
     * hashed band keys that would run at 100 TB. xxh64 is not expressible

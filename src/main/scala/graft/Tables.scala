@@ -12,8 +12,12 @@ object Tables {
     // events.ts is parquet TIMESTAMP(NANOS): Spark 4 only reads it as a
     // nanos-since-epoch LongType behind this legacy flag (runtime-settable).
     spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
-    val df = spark.read.parquet(s"$sfDir/$name.parquet")
-    val floored = withScanFloor(spark, sfDir, name, df)
+    // a supplied schema spares the read its footer-inference job; with
+    // no schema (no files), the read fails as it always has
+    val path = s"$sfDir/$name.parquet"
+    val stats = TableStats(spark, path)
+    val df = stats.schema.fold(spark.read)(spark.read.schema).parquet(path)
+    val floored = withScanFloor(spark, stats, df)
     if (name == "events") normalizeEventTs(floored) else floored
   }
 
@@ -34,12 +38,6 @@ object Tables {
     }
   }
 
-  /** (sessionUUID, path) -> (planned scan splits, on-disk bytes). Keyed
-    * by the session's UUID string, not the session object, so stopped
-    * sessions are not strongly retained (r15 ADVICE); bounded by the
-    * handful of (sf, table) paths a process ever loads. */
-  private val scanMetaCache =
-    new java.util.concurrent.ConcurrentHashMap[(String, String), (Int, Long)]()
   /** Width of the floor exchange: unconditional defaultParallelism put 32
     * near-empty partitions under every consumer at bench SF — the driver's
     * r15 8-core cell beat its 32-core cell on 40+ queries on identical
@@ -63,6 +61,10 @@ object Tables {
     * (the generated tables' unique key — deterministic under task
     * retry, unlike a rand-derived key), at most floor-wide.
     *
+    * Both inputs come from [[TableStats]], with no job: the width from
+    * the listed bytes, the gate from the splits a scan of those files
+    * plans (Spark's own split packing of the same lengths).
+    *
     * Scale behavior: the gate reads the PLANNED scan partition count,
     * so any input big enough to split into >= cores tasks (anything
     * past a few hundred MB, let alone 100 TB) takes no extra exchange
@@ -84,23 +86,15 @@ object Tables {
     * side (1.9 s → 3.4 s). A derived expression matches no
     * requirement, so every original exchange (and its ReusedExchange)
     * stays put. */
-  private def withScanFloor(spark: SparkSession, sfDir: String,
-      name: String, df: DataFrame): DataFrame = {
+  private def withScanFloor(spark: SparkSession, stats: TableStats.Table,
+      df: DataFrame): DataFrame = {
     val floor = spark.conf.getOption("spark.graft.scanFloor").map(_.toInt)
       .getOrElse(spark.sparkContext.defaultParallelism)
     if (floor <= 1) df
     else {
-      val sessionKey =
-        spark.sparkContext.applicationId + "@" + System.identityHashCode(spark)
-      val (scanParts, bytes) = scanMetaCache.computeIfAbsent(
-        (sessionKey, s"$sfDir/$name"), { case (_, p) =>
-          val path = new org.apache.hadoop.fs.Path(s"$p.parquet")
-          val fs = path.getFileSystem(spark.sessionState.newHadoopConf())
-          (df.rdd.getNumPartitions, fs.getContentSummary(path).getLength)
-        })
       val width = math.min(floor.toLong, math.max(1L,
-        (bytes + scanFloorBytesPerPart - 1) / scanFloorBytesPerPart)).toInt
-      if (scanParts >= width || width <= 1) df
+        (stats.bytes + scanFloorBytesPerPart - 1) / scanFloorBytesPerPart)).toInt
+      if (width <= 1 || stats.scanSplits >= width) df
       else df.repartition(width, xxhash64(col(df.columns.head)))
     }
   }

@@ -167,19 +167,6 @@ object Sketches {
     h
   }
 
-  /** Little-endian long of md5 digest bytes 0..7 — bit-identical to
-    * DuckDB's `md5_number_upper` (verified against duckdb 1.x), the
-    * companion of [[md5Lower64]] for 128-bit oracle-replicable hashing. */
-  def md5Upper64(s: UTF8String): Long = {
-    val md = md5Local.get()
-    md.reset()
-    val d = md.digest(s.getBytes)
-    var h = 0L
-    var i = 7
-    while (i >= 0) { h = (h << 8) | (d(i) & 0xFFL); i -= 1 }
-    h
-  }
-
   /** One pass over `tokens`: 64-bit SimHash, per-bit majority vote of
     * token hashes. `algo` picks the per-token hash: "xxh64" (fastest,
     * production default) or "md5" (oracle-replicable: DuckDB

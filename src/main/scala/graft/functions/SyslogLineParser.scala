@@ -40,11 +40,6 @@ object SyslogLineParser {
     "Jan" -> 1, "Feb" -> 2, "Mar" -> 3, "Apr" -> 4, "May" -> 5, "Jun" -> 6,
     "Jul" -> 7, "Aug" -> 8, "Sep" -> 9, "Oct" -> 10, "Nov" -> 11, "Dec" -> 12)
 
-  private val cumDays = Array(0, 31, 59, 90, 120, 151, 181, 212, 243, 273, 304, 334)
-
-  private def isLeap(y: Int): Boolean =
-    (y % 4 == 0 && y % 100 != 0) || y % 400 == 0
-
   /** Days since epoch for a civil date (proleptic Gregorian, public
     * Howard Hinnant algorithm shape). */
   private def daysFromCivil(y: Int, m: Int, d: Int): Long = {

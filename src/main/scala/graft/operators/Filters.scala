@@ -87,9 +87,6 @@ object Filters {
       .drop("__match")
   }
 
-  /** Literal string matcher backend (`lib/logmatcher.h` "string"). */
-  def matchesLiteral(s: String, value: Column): Column = value === lit(s)
-
   /** `type(string)` matcher with the full flag surface
     * (`lib/logmatcher.c` log_matcher_string_match_string): exact
     * equality by default, `flags(prefix)` / `flags(substring)` /

@@ -69,16 +69,6 @@ object Parsers {
     struct(fields: _*)
   }
 
-  /** Key pattern of the kv-scanner: alnum + `_ - .` (kv-scanner.c
-    * key_is_valid_character). */
-  private val keyRe = "[a-zA-Z0-9][a-zA-Z0-9_.\\-]*"
-
-  private def kvPairRe(valueSeparator: Char): String = {
-    val vs = java.util.regex.Pattern.quote(valueSeparator.toString)
-    // value = double-quoted | single-quoted | bare (up to whitespace)
-    s"($keyRe)$vs(\"(?:\\\\.|[^\"])*\"|'(?:\\\\.|[^'])*'|[^\\s]*)"
-  }
-
   /** kv-parser(): extract key=value pairs from free text into a
     * `MapType(String,String)` column. Handles quoted values with
     * backslash escapes and tolerates stray words between pairs (which

@@ -101,18 +101,4 @@ object Routing {
     * lists (`lib/cfg-tree.h:36`) — union of every source frame. */
   def catchall(sources: Seq[DataFrame]): DataFrame =
     sources.reduce(_.unionByName(_, allowMissingColumns = true))
-
-  /** unmatched-drop accounting (`PIF_DROP_UNMATCHED` + the `matched`
-    * flag, `lib/logpipe.h:54,388`): keep rows matching `pred` and count
-    * the dropped remainder as a named observation. `Dataset.observe`
-    * compiles to CollectMetrics — the counts ride the existing action
-    * (batch) or epoch (streaming) with no extra pass over the data;
-    * read them via `org.apache.spark.sql.Observation` or a streaming
-    * progress listener. */
-  def filterCountingUnmatched(df: DataFrame, pred: Column,
-      obs: org.apache.spark.sql.Observation): DataFrame =
-    df.observe(obs,
-        sum(when(pred, 0L).otherwise(1L)).as("unmatched_dropped"),
-        count(lit(1)).as("total"))
-      .filter(pred)
 }

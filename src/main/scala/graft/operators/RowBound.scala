@@ -20,17 +20,11 @@ import org.apache.spark.sql.catalyst.plans.logical._
   * traversed (Project/Filter/Sort/repartition/limits/dedup/subquery
   * aliases/Window — Window emits exactly one row per input row); leaves
   * must be LocalRelations (exact size) or parquet file relations (exact
-  * row counts from footers, cached per file path+size). Anything else —
+  * row counts from footers, through [[graft.TableStats]]). Anything else —
   * joins, generates, unions, streaming sources — returns None and the
   * caller probes.
   */
 object RowBound {
-
-  /** (path, fileSize) -> footer row count. Bounded by the distinct data
-    * files a process touches; size in the key catches regenerated
-    * fixtures. */
-  private val footerCache =
-    new java.util.concurrent.ConcurrentHashMap[(String, Long), Long]()
 
   def upperBound(df: DataFrame): Option[Long] =
     try bound(df.queryExecution.analyzed,
@@ -92,17 +86,8 @@ object RowBound {
         case fs: org.apache.spark.sql.execution.datasources.HadoopFsRelation
             if fs.fileFormat.isInstanceOf[
               org.apache.spark.sql.execution.datasources.parquet.ParquetFileFormat] =>
-          val files = fs.location.listFiles(Nil, Nil).flatMap(_.files)
-          val counts = files.map { f =>
-            footerCache.computeIfAbsent(
-              (f.getPath.toString, f.getLen), { _ =>
-                val in = org.apache.parquet.hadoop.util.HadoopInputFile
-                  .fromPath(f.getPath, conf)
-                val r = org.apache.parquet.hadoop.ParquetFileReader.open(in)
-                try r.getRecordCount finally r.close()
-              })
-          }
-          Some(counts.sum)
+          Some(fs.location.listFiles(Nil, Nil).flatMap(_.files)
+            .map(f => graft.TableStats.rows(f.fileStatus, conf)).sum)
         case _ => None
       }
     case _ => None

@@ -28,11 +28,6 @@ object ValuePairs {
       lit("MESSAGE"), message, lit("PID"), pid, lit("PRIORITY"), priority,
       lit("PROGRAM"), program)
 
-  /** rfc5424 scope = rfc3164 + MSGID + SDATA pairs. */
-  def rfc5424Scope(base: Column, msgid: Column, sdata: Column): Column =
-    map_concat(base, map(lit("MSGID"), msgid),
-      transform_keys(sdata, (k, _) => concat(lit(".SDATA."), k)))
-
   /** The full named-scope surface of `value-pairs(scope(...))` —
     * `lib/value-pairs/value-pairs.c:63-141` scope tables +
     * `vp_update_builtin_list_of_values`/`vp_merge_builtins` (:340-400):

@@ -189,8 +189,6 @@ object Template {
     out.result()
   }
 
-  private[template] def splitArgs(s: String): Seq[String] = splitArgs2(s).map(_._1)
-
   // ---- compiler ----------------------------------------------------------
   /** Compile to a single string Column. `resolve` maps a macro/field name
     * to its Column (see [[Macros.resolver]]); `templates` is the named

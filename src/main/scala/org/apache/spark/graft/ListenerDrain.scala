@@ -12,4 +12,8 @@ import org.apache.spark.SparkContext
 object ListenerDrain {
   def waitUntilEmpty(sc: SparkContext): Unit =
     sc.listenerBus.waitUntilEmpty()
+
+  /** The shuffle a shuffle-map stage writes (`private[spark]` too). */
+  def shuffleDepId(s: org.apache.spark.scheduler.StageInfo): Option[Int] =
+    s.shuffleDepId
 }

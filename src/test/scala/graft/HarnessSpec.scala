@@ -20,6 +20,16 @@ class HarnessSpec extends AnyFunSuite {
     assert(Bench.childMedian("""{"metric":"total"}""", "grouping_by_session").isEmpty)
   }
 
+  test("Bench names the SPARK_GRAFT_ONLY entries it would not time") {
+    val benched = Bench.benchedQueries.map(_._1)
+    assert(Bench.unbenched(Set("agg_stats", "grouping_by_session"), benched).isEmpty)
+    assert(Bench.unbenched(Set("grouping_by_sesion", "agg_stats", "a_typo"),
+      benched) == Seq("a_typo", "grouping_by_sesion"))
+    // an oracle-only form is in the registry but not benched
+    assert(SparkEntry.queries.contains("dedup_simhash"))
+    assert(Bench.unbenched(Set("dedup_simhash"), benched) == Seq("dedup_simhash"))
+  }
+
   test("only the dev mains read environment variables or system " +
       "properties") {
     val root = new java.io.File("src/main/scala")

@@ -104,17 +104,6 @@ class RoutingEnrichSpec extends GraftSuite {
     assert(got == Map("10.0.3.7" -> "net-a", "192.168.0.9" -> "net-b", "8.8.8.8" -> null))
   }
 
-  test("unmatched-drop accounting rides the action via observe") {
-    import spark.implicits._
-    val df = Seq(1, 2, 3, 4, 5).toDF("n")
-    val obs = org.apache.spark.sql.Observation("route")
-    val kept = graft.operators.Routing.filterCountingUnmatched(
-      df, col("n") % 2 === 0, obs)
-    assert(kept.count() == 2)
-    assert(obs.get("unmatched_dropped") == 3L)
-    assert(obs.get("total") == 5L)
-  }
-
   test("asof join: latest right row at or before each left timestamp") {
     import spark.implicits._
     val left = Seq((1L, "k1", 10L), (2L, "k1", 25L), (3L, "k1", 5L),
