@@ -1,11 +1,12 @@
 package graft
 
 import org.apache.spark.graft.ListenerDrain
-import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart, SparkListenerStageCompleted, SparkListenerTaskEnd}
+import org.apache.spark.scheduler.{SparkListener, SparkListenerEvent, SparkListenerJobStart, SparkListenerStageCompleted, SparkListenerTaskEnd}
 import org.apache.spark.sql.{DataFrame, SparkSession}
-import org.apache.spark.sql.execution.{DataSourceScanExec, ExplainUtils, FormattedMode, SparkPlan}
+import org.apache.spark.sql.execution.{DataSourceScanExec, ExplainUtils, FormattedMode, SQLExecution, SparkPlan}
 import org.apache.spark.sql.execution.adaptive.{AdaptiveSparkPlanHelper, ShuffleQueryStageExec}
 import org.apache.spark.sql.execution.exchange.{Exchange, ReusedExchangeExec}
+import org.apache.spark.sql.execution.ui.SparkListenerSQLExecutionStart
 import scala.collection.mutable
 
 /** Dev plan-inspection and attribution main: print the formatted
@@ -23,6 +24,9 @@ import scala.collection.mutable
   *  - build, plan and run ms (DataFrame construction; analysis,
   *    optimization and physical planning; `toRdd.count`), and
   *    `build_jobs`, the Spark jobs submitted while building;
+  *  - one `sql` row per SQL execution started while building: the
+  *    jobs it ran and its description, the call site that started it
+  *    (e.g. `count at Dedup.scala:1148`);
   *  - one row per stage run while building, planning or running,
   *    heaviest first: tasks, summed executor run time, median and max
   *    task duration (ms), shuffle read/write, spill and input KiB, and
@@ -53,12 +57,23 @@ object Explain extends AdaptiveSparkPlanHelper {
   }
 
   /** Per-stage task metrics, and the count, of every job run while it
-    * is registered. */
+    * is registered; each SQL execution started, in start order, with
+    * the jobs it ran. */
   private final class StageListener extends SparkListener {
     val stages = mutable.LinkedHashMap.empty[Int, StageAgg]
     var jobs = 0
+    val executions = mutable.LinkedHashMap.empty[Long, String]
+    val executionJobs = mutable.Map.empty[Long, Int].withDefaultValue(0)
     override def onJobStart(e: SparkListenerJobStart): Unit = synchronized {
       jobs += 1
+      Option(e.properties)
+        .flatMap(p => Option(p.getProperty(SQLExecution.EXECUTION_ID_KEY)))
+        .foreach(id => executionJobs(id.toLong) += 1)
+    }
+    override def onOtherEvent(e: SparkListenerEvent): Unit = e match {
+      case s: SparkListenerSQLExecutionStart =>
+        synchronized { executions(s.executionId) = s.description }
+      case _ =>
     }
     override def onTaskEnd(e: SparkListenerTaskEnd): Unit = synchronized {
       val a = stages.getOrElseUpdate(e.stageId, new StageAgg)
@@ -117,7 +132,8 @@ object Explain extends AdaptiveSparkPlanHelper {
     val t1 = System.nanoTime()
     // listener events arrive asynchronously on the listener bus
     ListenerDrain.waitUntilEmpty(spark.sparkContext)
-    val buildJobs = listener.synchronized(listener.jobs)
+    val (buildJobs, buildSql) = listener.synchronized((listener.jobs,
+      listener.executions.toSeq.map { case (id, d) => (listener.executionJobs(id), d) }))
     val t2 = System.nanoTime()
     df.queryExecution.executedPlan
     val t3 = System.nanoTime()
@@ -129,6 +145,8 @@ object Explain extends AdaptiveSparkPlanHelper {
     println(s"===== $name exec =====")
     println(f"build ${(t1 - t0) / 1e6}%.1f ms  plan ${(t3 - t2) / 1e6}%.1f ms  " +
       f"run ${(t4 - t3) / 1e6}%.1f ms  build_jobs $buildJobs")
+    for ((jobs, description) <- buildSql)
+      println(f"  sql $jobs%3d jobs  $description")
     println(f"${"stage"}%6s ${"tasks"}%6s ${"task_ms"}%9s ${"med_ms"}%7s " +
       f"${"max_ms"}%7s ${"shuf_rd_kb"}%11s ${"shuf_wr_kb"}%11s " +
       f"${"spill_kb"}%9s ${"input_kb"}%9s  name")

@@ -1,8 +1,8 @@
 package graft
 
 import graft.functions.{GraftFunctions, JsonFlatten, RadixMatch, XmlFlatten}
-import graft.operators.{Enrich, Filters, Parsers, Rewrites, Routing, Sessions, ValuePairs}
-import graft.operators.Routing.Branch
+import graft.dsl.LogPath
+import graft.operators.{Enrich, Filters, Parsers, Rewrites, Sessions, ValuePairs}
 import graft.pipeline.{Dedup, Multimodal, Similarity, TextAnalysis}
 import graft.template.Template
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
@@ -422,12 +422,13 @@ object Queries {
     (s, d) => {
       val ev = Tables.events(s, d)
       // final+final+catch-rest compiles to disjoint predicates (if/elif/else)
-      Routing.junction(ev, Seq(
-        Branch("err", col("event_type") === "error", isFinal = true),
-        Branch("big", col("value") > 100, isFinal = true),
-        Branch("other", lit(true))),
-        tagBranch = Some("branch"))
-        .select(col("event_id"), col("branch"))
+      LogPath.compileJunction(ev, Seq(
+        LogPath.Channel("err", Seq(LogPath.Filter(col("event_type") === "error")),
+          Set(LogPath.Final)),
+        LogPath.Channel("big", Seq(LogPath.Filter(col("value") > 100)),
+          Set(LogPath.Final)),
+        LogPath.Channel("other", Nil)))
+        .select(col("event_id"), col("__channel").as("branch"))
         .orderBy(col("event_id"), col("branch"))
     },
     Some("""SELECT event_id,
@@ -559,7 +560,7 @@ object Queries {
   private val appParserQ = Q("app_parser",
     (s, d) => {
       val ev = Tables.events(s, d)
-      graft.dsl.LogPath.appParser(ev, Seq(
+      LogPath.appParser(ev, Seq(
         ("errors", col("event_type") === "error",
           _.withColumn("parsed", concat(lit("E"), col("event_id")))),
         ("bigval", col("value") > 100,
@@ -1248,20 +1249,6 @@ object Queries {
   // session boundary when the inactivity gap is >= timeout (Spark's
   // session_window end is exclusive).
   // ---------------------------------------------------------------------
-  /** Hot-key protection for the session family. DEFAULT ON since r16
-    * (r15 VERDICT item 3: the r14 scale-killer — one dominant key
-    * serializing its whole session sort+fold into one task — was fixed
-    * only when the env knob was set, so a production run with a chatty
-    * host still straggled by default). The default budget is the
-    * r15-matrix-measured production value: 200k rows/task keeps every
-    * split sort bounded while the skew50 cells land within the r14
-    * acceptance bar (grouping_by_session sf100p_skew50 fixed-width twin
-    * 183.7 -> 76.9 s). On healthy data the zero-hot fast path
-    * (Sessions.skewSessionAgg step 1b) returns the EXACT unsplit
-    * sorted-run plan, so the default costs one bounded detection pass
-    * and nothing else. */
-  private def sessionSplit: Option[Long] = Sessions.defaultHotKeyBudget
-
   private val groupingBySession = Q("grouping_by_session",
     (s, d) => {
       val ev = syslogishEvents(s, d)
@@ -1269,8 +1256,7 @@ object Queries {
         Seq(count(lit(1)).as("n"),
           sum(dec(col("value"))).cast("double").as("sum_value"),
           Sessions.sortedValues(col("event_type"),
-            struct(col("ts"), col("event_id"))).as("types")),
-        splitHotKeysOver = sessionSplit)
+            struct(col("ts"), col("event_id"))).as("types")))
         .select(col("key").as("user_id"), unix_micros(col("session_start")).as("start_us"),
           col("n"), col("sum_value"), col("types"))
         .orderBy(col("user_id"), col("start_us"))
@@ -1298,8 +1284,7 @@ object Queries {
         col("ts"), 86400,
         Seq(count(lit(1)).as("n"), min(col("event_id")).as("first_ev"),
           max(col("event_id")).as("last_ev")),
-        where = col("value") > 10, having = col("n") >= 4,
-        splitHotKeysOver = sessionSplit)
+        where = col("value") > 10, having = col("n") >= 4)
         .select(col("key"), col("n"), col("first_ev"), col("last_ev"),
           unix_micros(col("session_start")).as("start_us"))
         .orderBy(col("key"), col("start_us"))
@@ -1334,8 +1319,7 @@ object Queries {
           Sessions.sortedValues(
             when(col("event_type") === "error", col("event_id").cast("string")),
             struct(col("ts"), col("event_id"))).as("grep_errors"),
-          sum(dec(col("value"))).cast("double").as("ctx_sum")),
-        splitHotKeysOver = sessionSplit)
+          sum(dec(col("value"))).cast("double").as("ctx_sum")))
         .select(col("key").as("user_id"), unix_micros(col("session_start")).as("start_us"),
           col("context_length"), col("context_values"), col("grep_errors"), col("ctx_sum"))
         .orderBy(col("user_id"), col("start_us"))
@@ -1362,7 +1346,7 @@ object Queries {
     (s, d) => {
       val ev = syslogishEvents(s, d)
       Sessions.suppress(ev, concat_ws("|", col("user_id"), col("event_type")),
-        col("ts"), 86400, col("event_id"), splitHotKeysOver = sessionSplit)
+        col("ts"), 86400, col("event_id"))
         .orderBy(col("suppress_key"), col("first_ts_us"))
     },
     Some("""WITH x AS (
@@ -1396,7 +1380,7 @@ object Queries {
           sum(dec(col("value"))).cast("double").as("sum_value"),
           Sessions.sortedValues(col("event_type"),
             struct(col("ts"), col("event_id"))).as("types")),
-        splitHotKeysOver = Some(64L))
+        splitHotKeysOver = 64L)
         .select(col("key").as("user_id"), unix_micros(col("session_start")).as("start_us"),
           col("n"), col("sum_value"), col("types"))
         .orderBy(col("user_id"), col("start_us"))
@@ -1424,7 +1408,7 @@ object Queries {
     (s, d) => {
       val ev = syslogishEvents(s, d)
       Sessions.suppress(ev, concat_ws("|", col("user_id"), col("event_type")),
-        col("ts"), 86400, col("event_id"), splitHotKeysOver = Some(32L))
+        col("ts"), 86400, col("event_id"), splitHotKeysOver = 32L)
         .orderBy(col("suppress_key"), col("first_ts_us"))
     },
     Some("""WITH x AS (
@@ -4357,8 +4341,7 @@ object Queries {
       val ev = syslogishEvents(s, d)
       Sessions.groupingBy(ev, col("user_id"), col("ts"), 21600,
         Seq(count(lit(1)).as("n"),
-          sum(dec(col("value"))).cast("double").as("sum_value")),
-        splitHotKeysOver = sessionSplit)
+          sum(dec(col("value"))).cast("double").as("sum_value")))
         .select(col("key").as("user_id"),
           unix_micros(col("session_start")).as("start_us"),
           col("n"), col("sum_value"))

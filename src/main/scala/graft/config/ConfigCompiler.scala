@@ -1479,18 +1479,10 @@ object ConfigCompiler {
           }
           cur = (cur +: joined).reduce(_.unionByName(_, allowMissingColumns = true))
         case JunctionElem(chans) =>
-          val lpChans = chans.zipWithIndex.map { case (c, i) =>
-            LogPath.Channel(s"ch$i", c.path.flatMap(elem(cfg, _)),
-              c.flags.flatMap {
-                case "final" => Some(LogPath.Final)
-                case "fallback" => Some(LogPath.Fallback)
-                case _ => None
-              }.toSet)
-          }
           // each channel body recurses so nested destinations route;
           // the channel's own filters fold into the delivery predicate
           // AND re-apply inside the body — idempotent
-          cur = LogPath.compileJunctionWith(cur, lpChans,
+          cur = LogPath.compileJunctionWith(cur, channels(cfg, chans),
             (i, d, _) => walk(d, chans(i).path))
         case e => cur = LogPath.compile(cur, elem(cfg, e))
       }
@@ -1525,16 +1517,20 @@ object ConfigCompiler {
     case InlineStmt("parser", s) => Seq(LogPath.Transform(parserFn(s, cfg)))
     case InlineStmt("rewrite", s) => Seq(LogPath.Transform(rewriteFn(cfg, s)))
     case InlineStmt(k, s) => throw new IllegalArgumentException(s"unsupported inline $k ${s.name}")
-    case JunctionElem(chans) =>
-      Seq(LogPath.Junction(chans.zipWithIndex.map { case (c, i) =>
-        LogPath.Channel(s"ch$i", c.path.flatMap(elem(cfg, _)),
-          c.flags.flatMap {
-            case "final" => Some(LogPath.Final)
-            case "fallback" => Some(LogPath.Fallback)
-            case _ => None
-          }.toSet)
-      }))
+    case JunctionElem(chans) => Seq(LogPath.Junction(channels(cfg, chans)))
   }
+
+  /** A junction's channels as `LogPath` channels named `ch<i>`, with the
+    * `flags(final)` / `flags(fallback)` delivery flags. */
+  private def channels(cfg: Config, chans: Seq[ChannelElem]): Seq[LogPath.Channel] =
+    chans.zipWithIndex.map { case (c, i) =>
+      LogPath.Channel(s"ch$i", c.path.flatMap(elem(cfg, _)),
+        c.flags.flatMap {
+          case "final" => Some(LogPath.Final)
+          case "fallback" => Some(LogPath.Fallback)
+          case _ => None
+        }.toSet)
+    }
 
   // ---- filters --------------------------------------------------------------
   private[config] def filterCol(cfg: Config, e: FilterExpr): Column =
@@ -1954,12 +1950,7 @@ object ConfigCompiler {
             aggTemplate(t, resolve, sortKey).as(name) }
           val out = graft.operators.Sessions.groupingBy(df,
             Template.column(keyT, df.columns.toSeq), col("ts"), timeout,
-            aggs, whereCol,
-            // hot-key protection default-on (r16) — config-compiled
-            // grouping-by is the production surface; see
-            // Sessions.defaultHotKeyBudget (zero-hot data keeps the
-            // exact unsplit plan; streaming frames skip the route)
-            splitHotKeysOver = graft.operators.Sessions.defaultHotKeyBudget)
+            aggs, whereCol)
           havingExpr match {
             case None => out
             case Some(e) => out.filter(filterColTemplated(e,

@@ -40,6 +40,9 @@ object LogPath {
     private[dsl] def matchPred: Column =
       elements.collect { case Filter(p) => p }
         .reduceOption(_ && _).getOrElse(lit(true))
+    /** The channel's elements after its top-level filters, which
+      * [[deliveryPredicates]] has already folded into delivery. */
+    def body: Seq[Element] = elements.filterNot(_.isInstanceOf[Filter])
   }
 
   /** Compile a path (sequence of elements) over an input DataFrame —
@@ -51,13 +54,45 @@ object LogPath {
       case (d, Junction(chs)) => compileJunction(d, chs)
     }
 
+  /** The mpx delivery rules (`lib/logmpx.c:88-109`, SURVEY §2.6) as one
+    * predicate per channel, in channel order. The multiplexer offers a
+    * message to the non-fallback channels in order, then — only if none
+    * of them matched — to the fallback channels in order; within each
+    * pass a matching FINAL channel stops the later ones. So channel k
+    * receives `match_k && !match_j` for every earlier FINAL channel j of
+    * its pass, and a fallback channel additionally requires that no
+    * non-fallback channel matched. Every fan-out — the junction compile
+    * and the streaming fan-out sink
+    * (`graft.streaming.Sinks.foreachBatchFanOut`) — delivers through
+    * these. */
+  def deliveryPredicates(channels: Seq[Channel]): Seq[Column] = {
+    // null-safe match: a filter over a NULL column (e.g. program on an
+    // unparsed line) evaluates to SQL NULL, and a raw NULL in the
+    // `match && !blocked` / `!anyMatch` chains would drop the row from
+    // EVERY channel including the fallback — the reference's filters
+    // simply don't match on unset values, so NULL coerces to false
+    def pred(ch: Channel): Column = coalesce(ch.matchPred, lit(false))
+    def isFallback(ch: Channel): Boolean = ch.flags.contains(Fallback)
+    val anyMatch = channels.filterNot(isFallback).map(pred)
+      .reduceOption(_ || _).getOrElse(lit(false))
+    // the matches of the FINAL channels seen so far, per pass
+    var blocked = Map.empty[Boolean, Column]
+    channels.map { ch =>
+      val fallback = isFallback(ch)
+      val own = if (fallback) pred(ch) && !anyMatch else pred(ch)
+      val deliver = blocked.get(fallback).fold(own)(b => own && !b)
+      if (ch.flags.contains(Final))
+        blocked += fallback -> blocked.get(fallback).fold(pred(ch))(_ || pred(ch))
+      deliver
+    }
+  }
+
   /** Junction compile — `cfg_tree_compile_junction` + the mpx delivery
-    * rules, as disjoint predicates (SURVEY §2.6): channel k receives
-    * `match_k && !match_j` for every earlier FINAL channel j; a FALLBACK
-    * channel receives rows matched by no non-fallback channel. Each
-    * branch then runs its own parsers/rewrites; outputs union by name
-    * (missing columns null-filled), preserving the reference's
-    * "branches may produce different NV sets" behavior. */
+    * rules of [[deliveryPredicates]]. Each branch then runs its own
+    * parsers/rewrites; outputs union by name (missing columns
+    * null-filled), preserving the reference's "branches may produce
+    * different NV sets" behavior. Output rows carry their channel's
+    * name in `__channel`. */
   def compileJunction(df: DataFrame, channels: Seq[Channel]): DataFrame =
     compileJunctionWith(df, channels, (_, d, body) => compile(d, body))
 
@@ -69,30 +104,14 @@ object LogPath {
     * identical. */
   def compileJunctionWith(df: DataFrame, channels: Seq[Channel],
       compileBody: (Int, DataFrame, Seq[Element]) => DataFrame): DataFrame = {
-    // null-safe match: a filter over a NULL column (e.g. program on an
-    // unparsed line) evaluates to SQL NULL, and a raw NULL in the
-    // `match && !blocked` / `!anyMatch` chains would drop the row from
-    // EVERY channel including the fallback — the reference's filters
-    // simply don't match on unset values, so NULL coerces to false
-    def pred(ch: Channel): Column = coalesce(ch.matchPred, lit(false))
-    val nonFallback = channels.filterNot(_.flags.contains(Fallback))
-    val anyMatch = nonFallback.map(pred)
-      .reduceOption(_ || _).getOrElse(lit(false))
-    var blocked: Option[Column] = None
-    val outs = channels.zipWithIndex.map { case (ch, i) =>
-      val deliver =
-        if (ch.flags.contains(Fallback)) !anyMatch
-        else blocked.fold(pred(ch))(b => pred(ch) && !b)
-      if (ch.flags.contains(Final) && !ch.flags.contains(Fallback))
-        blocked = Some(blocked.fold(pred(ch))(_ || pred(ch)))
-      // the channel's own filters already folded into `deliver`
-      val body = ch.elements.filterNot(_.isInstanceOf[Filter])
-      val out = compileBody(i, df.filter(deliver), body)
-      // a nested junction already labeled its rows — keep the LEAF
-      // channel name (the actual route), only label unlabeled rows
-      if (out.columns.contains("__channel"))
-        out.withColumn("__channel", coalesce(col("__channel"), lit(ch.name)))
-      else out.withColumn("__channel", lit(ch.name))
+    val outs = channels.zip(deliveryPredicates(channels)).zipWithIndex.map {
+      case ((ch, deliver), i) =>
+        val out = compileBody(i, df.filter(deliver), ch.body)
+        // a nested junction already labeled its rows — keep the LEAF
+        // channel name (the actual route), only label unlabeled rows
+        if (out.columns.contains("__channel"))
+          out.withColumn("__channel", coalesce(col("__channel"), lit(ch.name)))
+        else out.withColumn("__channel", lit(ch.name))
     }
     def union = outs.reduce(_.unionByName(_, allowMissingColumns = true))
     // DISJOINT delivery (final/fallback structure: every non-fallback

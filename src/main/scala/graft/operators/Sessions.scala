@@ -33,10 +33,10 @@ object Sessions {
     * sf100p_skew50 fixed-width twin 183.7 -> 76.9 s; skew50 cells
     * within the r14 acceptance bar of 2-3x uniform). On healthy data
     * the zero-hot fast path in [[skewSessionAgg]] returns the EXACT
-    * unsplit plan, so defaulting the protection ON costs one bounded
-    * detection pass and nothing else. Callers that want the
-    * always-unsplit route pass `splitHotKeysOver = None`. */
-  val defaultHotKeyBudget: Option[Long] = Some(200000L)
+    * unsplit plan, so the protection costs one bounded detection pass
+    * and nothing else. `Long.MaxValue` never splits: it takes the
+    * unsplit plan through the RowBound or zero-hot fast path. */
+  val defaultHotKeyBudget: Long = 200000L
 
   /** grouping-by() (`/root/reference/modules/dbparser/groupingby.c:
     * 35-51,479-487`): sessionize rows per `key` with an inactivity gap
@@ -49,87 +49,35 @@ object Sessions {
     *    $(context-values $x) → sortedValues below, $(sum $x) → sum).
     *
     * The session plan is the [[graft.functions.SessionOrdinal]]
-    * prefix-scan form (see the body comment for why neither builtin
-    * route is used); exposed columns `session_start`/`session_end`
-    * keep session_window's [first-event, last-event + gap) frame.
+    * prefix-scan form of [[skewSessionAgg]] (see its `unsplit` for why
+    * neither builtin route is used), split on keys with more than
+    * `splitHotKeysOver` rows; exposed columns `session_start`/
+    * `session_end` keep session_window's [first-event, last-event +
+    * gap) frame.
     */
   def groupingBy(df: DataFrame, key: Column, ts: Column, timeoutSeconds: Int,
       aggs: Seq[Column], where: Column = lit(true),
       having: Column = lit(true),
-      splitHotKeysOver: Option[Long] = None): DataFrame = {
-    // the skew route's hot-key detection is an eager bounded probe —
-    // meaningless (and unplannable) on a streaming frame, whose session
-    // semantics live in graft.streaming's stateful forms anyway
-    if (splitHotKeysOver.isDefined && !df.isStreaming) {
-      // Skew-split route (r15): a dominant key otherwise serializes its
-      // whole sort+scan+fold into ONE task (skew50: 57.1 s vs 6.2 s
-      // uniform at sf10p, scale_matrix_r14.jsonl). `aggs` must be
-      // ORDER-INSENSITIVE (count/sum/min/max/sortedValues are — the
-      // stitch branch aggregates under the default planner where input
-      // order is not the sorted order).
-      val base = df.filter(where).filter(ts.isNotNull)
-        .withColumn("__gkey", key).withColumn("__gts", ts)
-        .withColumn("__gus", unix_micros(col("__gts").cast("timestamp")))
-        .withColumn("__gmaxsrc", col("__gts"))
-      val fullAggs = aggs :+
-        min(col("__gts")).as("session_start") :+
-        max(col("__gmaxsrc")).as("__gmax")
-      return skewSessionAgg(base, Seq(col("__gts")),
-          timeoutSeconds * 1000000L, splitHotKeysOver.get,
-          mainAggs = fullAggs, stitchAggs = fullAggs, keyAlias = "key")
-        .filter(having)
-        .withColumn("session_end",
-          expr(s"timestampadd(SECOND, $timeoutSeconds, __gmax)"))
-        .drop("__gmax")
-    }
-    // Gap sessionization is a per-key prefix scan; both builtin routes
-    // measured superlinear decades on UNIFORM sf100p data:
-    //  - builtin session_window plans a partial ObjectHashAggregate
-    //    BEFORE the key exchange where every row is its own
-    //    [ts, ts+gap) window — nothing combines, the 128-key sort
-    //    fallback hits immediately, struct-window sort keys, and
-    //    MergingSessions sorts twice more (37x/decade, r13 matrix);
-    //  - the lag/cumulative-sum Window form pays WindowExec's
-    //    per-group ExternalAppendOnlyUnsafeRowArray buffering — every
-    //    row UnsafeRow.copy()'d into a buffer per window pass, twice
-    //    (lag + running sum chain into two Window operators) — 33x
-    //    last decade, jstack-attributed (scale_matrix_r14.jsonl).
-    // The minimal plan needs NO buffering: ONE exchange on the key,
-    // ONE in-partition sort (key, ts), a codegen'd Project whose
-    // stateful SessionOrdinal expression assigns ordinals in O(1)
-    // state per row, and ONE aggregate over (key, ordinal) whose
-    // required clustering the key exchange already satisfies.
-    // Session frame matches session_window exactly:
-    // [min(ts), max(ts) + gap).
-    val sess = df.filter(where).filter(ts.isNotNull)
+      splitHotKeysOver: Long = defaultHotKeyBudget): DataFrame = {
+    // `aggs` must be ORDER-INSENSITIVE (count/sum/min/max/sortedValues
+    // are): the skew route's stitch branch aggregates under the default
+    // planner, where input order is not the sorted order
+    val base = df.filter(where).filter(ts.isNotNull)
       .withColumn("__gkey", key).withColumn("__gts", ts)
       .withColumn("__gus", unix_micros(col("__gts").cast("timestamp")))
-      .repartition(col("__gkey"))
-      .sortWithinPartitions(col("__gkey"), col("__gts"))
-      .withColumn("__sess", graft.functions.SessionOrdinal.column(
-        col("__gkey"), col("__gus"), timeoutSeconds * 1000000L))
-    val agged = sess.withColumn("__gmaxsrc", col("__gts"))
-      .groupBy(col("__gkey").as("key"), col("__sess"))
-      .agg(aggs.head, (aggs.tail :+
-        min(col("__gts")).as("session_start") :+
-        max(col("__gmaxsrc")).as("__gmax")): _*)
-    // (key, ordinal) groups are CONSECUTIVE under the plan's one
-    // existing (key, ts) sort, so the aggregation is a streaming fold:
-    // SortedRunAgg claims the order and plans ONE Complete SortAggregate
-    // — no partial aggregate, no fallback sorts, one group's buffer in
-    // flight. Measured at sf100p cold-JVM vs the default planner routes:
-    //  - list aggregates ($(context-values) → collect_list, which forces
-    //    ObjectHashAggregate as a partial+final pair, both halves
-    //    sort-falling-back at 128 keys over the already-sorted stream):
-    //    99.6 s → 24.7 s (grouping_by_session);
-    //  - fixed-width aggregates (partial+final codegen HashAggregate
-    //    whose partial map fills at ~60M groups and combines ~nothing):
-    //    14.4 s → 10.9 s (grouping_by_having), 23.9 → 15.1 (suppress).
-    SortedRunAgg.reroute(agged, "__gkey", "__sess")
+      .withColumn("__gmaxsrc", col("__gts"))
+    // Session frame matches session_window exactly:
+    // [min(ts), max(ts) + gap).
+    val fullAggs = aggs :+
+      min(col("__gts")).as("session_start") :+
+      max(col("__gmaxsrc")).as("__gmax")
+    skewSessionAgg(base, Seq(col("__gts")),
+        timeoutSeconds * 1000000L, splitHotKeysOver,
+        mainAggs = fullAggs, stitchAggs = fullAggs, keyAlias = "key")
       .filter(having)
       .withColumn("session_end",
         expr(s"timestampadd(SECOND, $timeoutSeconds, __gmax)"))
-      .drop("__sess", "__gmax")
+      .drop("__gmax")
   }
 
   /** grouping-by's persist name (`groupingby.c:363-369`,
@@ -234,55 +182,27 @@ object Sessions {
     * micro-batches reorder; we define order by (ts, order)).
     */
   def suppress(df: DataFrame, key: Column, ts: Column, seconds: Int,
-      order: Column, splitHotKeysOver: Option[Long] = None): DataFrame = {
-    if (splitHotKeysOver.isDefined && !df.isStreaming) {
-      // Skew-split route — see groupingBy. first() rides the claimed
-      // sort on the main branch; the stitch branch (default planner, no
-      // order guarantee) uses the order-insensitive min_by equivalent.
-      val base = df.filter(ts.isNotNull)
-        .withColumn("__gkey", key).withColumn("__gts", ts)
-        .withColumn("__sord", order)
-        .withColumn("__gus", unix_micros(col("__gts").cast("timestamp")))
-      def shared = Seq(
-        unix_micros(min(col("__gts"))).as("first_ts_us"),
-        (count(lit(1)) - 1).as("n_suppressed"))
-      return skewSessionAgg(base, Seq(col("__gts"), col("__sord")),
-        seconds * 1000000L, splitHotKeysOver.get,
-        mainAggs = first(col("__sord")).as("first_id") +: shared,
-        stitchAggs = min_by(col("__sord"),
-          struct(col("__gts"), col("__sord"))).as("first_id") +: shared,
-        keyAlias = "suppress_key")
-        .select(col("suppress_key"), col("first_id"), col("first_ts_us"),
-          col("n_suppressed"))
-    }
-    // Same plan as groupingBy (see its body comment — neither builtin
-    // session route survives the sf100p decade): one key exchange, one
-    // in-partition (key, ts, order) sort, the SessionOrdinal prefix
-    // scan, one codegen'd HashAggregate. A repeat within `seconds` of
-    // its predecessor chains the window exactly like session_window's
-    // [ts, ts+gap) merge. first(__sord) is the first row of the
-    // session under the explicit (key, ts, order) in-partition sort —
-    // the sort and the aggregate share one whole-stage pipeline, so
-    // the input order is the sorted order (the previous min(struct)
-    // form forced a SortAggregate + a second in-task sort).
-    df.filter(ts.isNotNull) // session_window drops null-ts rows; keep that
-      .withColumn("__skey", key).withColumn("__sts", ts)
+      order: Column, splitHotKeysOver: Long = defaultHotKeyBudget): DataFrame = {
+    // A repeat within `seconds` of its predecessor chains the window
+    // exactly like session_window's [ts, ts+gap) merge. first() rides
+    // the claimed (key, ts, order) sort on the main branch; the stitch
+    // branch (default planner, no order guarantee) uses the
+    // order-insensitive min_by equivalent.
+    val base = df.filter(ts.isNotNull) // session_window drops null-ts rows; keep that
+      .withColumn("__gkey", key).withColumn("__gts", ts)
       .withColumn("__sord", order)
-      .withColumn("__sus", unix_micros(col("__sts").cast("timestamp")))
-      .repartition(col("__skey"))
-      .sortWithinPartitions(col("__skey"), col("__sts"), col("__sord"))
-      .withColumn("__sess", graft.functions.SessionOrdinal.column(
-        col("__skey"), col("__sus"), seconds * 1000000L))
-      .groupBy(col("__skey").as("suppress_key"), col("__sess"))
-      .agg(
-        first(col("__sord")).as("first_id"),
-        unix_micros(min(col("__sts"))).as("first_ts_us"),
-        (count(lit(1)) - 1).as("n_suppressed"))
-      // same sorted-run Complete aggregate as groupingBy (see its body
-      // comment): 23.9 -> 15.1 s at sf100p cold vs partial+final
-      // HashAggregate, 4.0x/decade
-      .transform(a => SortedRunAgg.reroute(a, "__skey", "__sess"))
-      .drop("__sess")
+      .withColumn("__gus", unix_micros(col("__gts").cast("timestamp")))
+    def shared = Seq(
+      unix_micros(min(col("__gts"))).as("first_ts_us"),
+      (count(lit(1)) - 1).as("n_suppressed"))
+    skewSessionAgg(base, Seq(col("__gts"), col("__sord")),
+      seconds * 1000000L, splitHotKeysOver,
+      mainAggs = first(col("__sord")).as("first_id") +: shared,
+      stitchAggs = min_by(col("__sord"),
+        struct(col("__gts"), col("__sord"))).as("first_id") +: shared,
+      keyAlias = "suppress_key")
+      .select(col("suppress_key"), col("first_id"), col("first_ts_us"),
+        col("n_suppressed"))
   }
 
   /** Skew-split sessionization core (r15 — kills the hot-key straggler
@@ -352,8 +272,37 @@ object Sessions {
     // (column references are read off ANALYZED probe plans — the
     // unresolved Column AST nests subtrees in ColumnNode wrappers that
     // a tree collect does not traverse)
-    // the exact unsplit sorted-run plan over `src` — both fast paths
-    // return it
+    // The exact unsplit sorted-run plan over `src`; every fast path
+    // returns it. Gap sessionization is a per-key prefix scan; both
+    // builtin routes measured superlinear decades on UNIFORM sf100p data:
+    //  - builtin session_window plans a partial ObjectHashAggregate
+    //    BEFORE the key exchange where every row is its own
+    //    [ts, ts+gap) window — nothing combines, the 128-key sort
+    //    fallback hits immediately, struct-window sort keys, and
+    //    MergingSessions sorts twice more (37x/decade, r13 matrix);
+    //  - the lag/cumulative-sum Window form pays WindowExec's
+    //    per-group ExternalAppendOnlyUnsafeRowArray buffering — every
+    //    row UnsafeRow.copy()'d into a buffer per window pass, twice
+    //    (lag + running sum chain into two Window operators) — 33x
+    //    last decade, jstack-attributed (scale_matrix_r14.jsonl).
+    // The minimal plan needs NO buffering: ONE exchange on the key,
+    // ONE in-partition sort (key, sortCols), a codegen'd Project whose
+    // stateful SessionOrdinal expression assigns ordinals in O(1)
+    // state per row, and ONE aggregate over (key, ordinal) whose
+    // required clustering the key exchange already satisfies.
+    // (key, ordinal) groups are CONSECUTIVE under that one sort, so
+    // the aggregation is a streaming fold: SortedRunAgg claims the
+    // order and plans ONE Complete SortAggregate — no partial
+    // aggregate, no fallback sorts, one group's buffer in flight, and
+    // suppress's first() reads the first row of each session. Measured
+    // at sf100p cold-JVM vs the default planner routes:
+    //  - list aggregates ($(context-values) → collect_list, which forces
+    //    ObjectHashAggregate as a partial+final pair, both halves
+    //    sort-falling-back at 128 keys over the already-sorted stream):
+    //    99.6 s → 24.7 s (grouping_by_session);
+    //  - fixed-width aggregates (partial+final codegen HashAggregate
+    //    whose partial map fills at ~60M groups and combines ~nothing):
+    //    14.4 s → 10.9 s (grouping_by_having), 23.9 → 15.1 (suppress).
     def unsplit(src: DataFrame): DataFrame = {
       val orded0 = src
         .repartition(col("__gkey"))
@@ -374,7 +323,10 @@ object Sessions {
     // session queries at bench SF. Default-on protection is therefore
     // literally free below the budget; detection only runs where a hot
     // key is arithmetically possible (any real scale).
-    if (RowBound.upperBound(base0).exists(_ <= budget))
+    // A streaming frame takes it too: hot-key detection is an eager
+    // probe, meaningless (and unplannable) on a stream, whose session
+    // semantics live in graft.streaming's stateful forms anyway.
+    if (base0.isStreaming || RowBound.upperBound(base0).exists(_ <= budget))
       return unsplit(base0)
     val needed = {
       val allAggs = mainAggs ++ stitchAggs
@@ -405,10 +357,10 @@ object Sessions {
     // plan's branches still re-execute the sorted scan 4x — uniform
     // sf10p measured 12.8 s vs 6.2 s unsplit). One bounded eager probe
     // (limit(1) over the already-filtered stats aggregate) decides:
-    // no hot keys -> the EXACT unsplit sorted-run plan, so enabling
-    // splitHotKeysOver on healthy data costs one detection pass and
-    // nothing else. This makes the operator eager when the knob is
-    // set — documented at both call sites.
+    // no hot keys -> the EXACT unsplit sorted-run plan, so the hot-key
+    // budget costs healthy data one detection pass and nothing else.
+    // This makes the operator eager on a batch frame whose row bound
+    // exceeds the budget.
     if (stats.limit(1).count() == 0L) return unsplit(base)
     // 2. split assignment + the one exchange + sort + ordinal scan
     val tagged = base

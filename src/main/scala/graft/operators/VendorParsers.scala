@@ -509,22 +509,4 @@ object VendorParsers {
   def websense(df: DataFrame, prefix: String = ".websense.",
       guard: Column = lit(true)): DataFrame =
     applyOne(df, websenseFx(df, prefix, guard))
-
-  // ---- application registry ------------------------------------------------
-  /** The reference's scl `application name[topic] { filter; parser }`
-    * blocks for the implemented vendor parsers, as (name, detect,
-    * parse) triples for [[graft.dsl.LogPath.appParser]] — the
-    * auto-detection path `app-parser()` drives
-    * (`scl/iptables/iptables.conf`, `scl/sudo/sudo.conf`,
-    * `scl/fortigate/fortigate.conf` application blocks). Detection
-    * reads the post-syslog-parse columns (facility/program/message);
-    * fortigate detects on the raw `<pri>date=` form like its
-    * syslog-raw topic. */
-  def applications: Seq[(String, Column, DataFrame => DataFrame)] = Seq(
-    ("iptables",
-      col("facility") === 0 && col("program") === "kernel" &&
-        col("message").contains("PROTO="),
-      iptables(_)),
-    ("sudo", col("program") === "sudo", sudo(_)),
-    ("fortigate", col("message").rlike("^<[0-9]+>date="), fortigate(_)))
 }

@@ -1,7 +1,6 @@
 package graft.streaming
 
-import graft.operators.Routing
-import graft.operators.Routing.Branch
+import graft.dsl.LogPath
 import org.apache.spark.sql.{DataFrame, Dataset, Row}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.{DataStreamWriter, StreamingQuery, Trigger}
@@ -31,18 +30,22 @@ object Sinks {
       }
 
   /** Multi-destination fan-out (`lib/logmpx.c:73-131`): one persisted
-    * micro-batch, each branch (with final/fallback routing semantics
-    * from §2.6) filtered and written — the scan runs once per trigger,
-    * not once per destination. */
+    * micro-batch, each channel delivered by the junction's
+    * final/fallback rules ([[LogPath.deliveryPredicates]]), its body
+    * compiled and written under the channel's name — the scan runs
+    * once per trigger, not once per destination. */
   def foreachBatchFanOut(ds: Dataset[Row], checkpoint: String,
-      branches: Seq[Branch], writer: (DataFrame, String) => Unit): DataStreamWriter[Row] =
+      channels: Seq[LogPath.Channel],
+      writer: (DataFrame, String) => Unit): DataStreamWriter[Row] =
     ds.writeStream
       .option("checkpointLocation", checkpoint)
       .foreachBatch { (batch: Dataset[Row], _: Long) =>
         val cached = batch.persist()
         try
-          Routing.effectivePredicates(branches).foreach { case (b, pred) =>
-            writer(cached.filter(pred).toDF(), b.name)
+          channels.zip(LogPath.deliveryPredicates(channels)).foreach {
+            case (ch, deliver) =>
+              writer(LogPath.compile(cached.filter(deliver).toDF(), ch.body),
+                ch.name)
           }
         finally { cached.unpersist(); () }
       }
@@ -304,10 +307,10 @@ object Sinks {
       .option("topic", topic)
       .option("checkpointLocation", checkpoint)
 
-  /** Start a fan-out writing parquet per branch under `outDir/<branch>`. */
+  /** Start a fan-out writing parquet per channel under `outDir/<channel>`. */
   def startFanOutParquet(ds: Dataset[Row], outDir: String, checkpoint: String,
-      branches: Seq[Branch]): StreamingQuery =
-    foreachBatchFanOut(ds, checkpoint, branches, (df, name) =>
+      channels: Seq[LogPath.Channel]): StreamingQuery =
+    foreachBatchFanOut(ds, checkpoint, channels, (df, name) =>
       df.write.mode("append").parquet(s"$outDir/$name"))
       .trigger(Trigger.AvailableNow())
       .start()

@@ -1,8 +1,8 @@
 package graft
 
 import graft.functions.SyslogLineParser
-import graft.operators.{Rewrites, Routing}
-import graft.operators.Routing.Branch
+import graft.dsl.LogPath.{Channel, Transform, compileJunction}
+import graft.operators.Rewrites
 import org.apache.spark.sql.{DataFrame, Row}
 import org.apache.spark.sql.functions._
 
@@ -21,7 +21,7 @@ import org.apache.spark.sql.functions._
   * channel must never leak into a sibling. That is the same
   * engine-visible contract COW write-protect gives the reference's
   * single-pass pipeline, and it is exercised here twice: through the
-  * Routing.junction API directly, and end-to-end through config text
+  * LogPath.compileJunction API directly, and end-to-end through config text
   * (the compiled `log {}` fan-out that r11's channel-destination fix
   * routes).
   */
@@ -86,26 +86,25 @@ class CloneLogmsgBatterySpec extends GraftSuite {
     // log_msg_clone_cow: fork the lineage into two channels; the clone
     // channel applies set_new_log_message_attributes, the source channel
     // is untouched
-    val fanned = Routing.junction(logMessage, Seq(
-      Branch("source", lit(true)),
-      Branch("clone", lit(true), transform = mutate)),
-      tagBranch = Some("__branch"))
+    val fanned = compileJunction(logMessage, Seq(
+      Channel("source", Nil),
+      Channel("clone", Seq(Transform(mutate)))))
 
     // assert_log_messages_equal(cloned, original) BEFORE mutation (:116):
     // an identity clone branch reads back the source values
-    val identityClone = Routing.junction(logMessage, Seq(
-      Branch("source", lit(true)),
-      Branch("clone", lit(true))), tagBranch = Some("__branch"))
-    assert(fields(identityClone.filter($"__branch" === "clone")) ==
+    val identityClone = compileJunction(logMessage, Seq(
+      Channel("source", Nil),
+      Channel("clone", Nil)))
+    assert(fields(identityClone.filter($"__channel" === "clone")) ==
       fields(original))
 
     // assert_log_messages_equal(log_message, original) AFTER the clone
     // was mutated (:120): the write-protect guarantee
-    assert(fields(fanned.filter($"__branch" === "source")) ==
+    assert(fields(fanned.filter($"__channel" === "source")) ==
       fields(original))
 
     // assert_new_log_message_attributes(cloned) (:121)
-    val clone = fanned.filter($"__branch" === "clone").orderBy("id")
+    val clone = fanned.filter($"__channel" === "clone").orderBy("id")
     val got = clone.select("host", "host_from", "message", "program",
       "pid", "msgid", "source").distinct().collect()
     assert(got.length == 1 && got.head == Row("newhost", "newhost",

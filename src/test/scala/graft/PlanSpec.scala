@@ -234,7 +234,7 @@ class PlanSpec extends GraftSuite {
   }
 
   test("disjoint junctions fuse to one events scan, no union") {
-    // app_parser (LogPath.appParser), route_junction (Routing.junction)
+    // app_parser (LogPath.appParser), route_junction (LogPath.compileJunction)
     // and config_pipeline_v3 (config if/elif/else) are final/fallback
     // junctions with row-local bodies. A union compile re-scans events
     // once per branch; FusedBranches falls back to it silently, so pin
@@ -1013,7 +1013,7 @@ class PlanSpec extends GraftSuite {
     val df = Sessions.groupingBy(in, col("k"), col("t"), 60,
       Seq(count(lit(1)).as("n"),
         Sessions.sortedValues(col("id"), struct(col("t"), col("id"))).as("ids")),
-      splitHotKeysOver = Some(300L))
+      splitHotKeysOver = 300L)
     df.queryExecution.toRdd.count()
     val fin = df.queryExecution.executedPlan.toString.linesIterator
       .takeWhile(!_.contains("== Initial Plan ==")).toSeq
@@ -1062,14 +1062,14 @@ class PlanSpec extends GraftSuite {
       ("key-" + (i % 40), java.sql.Timestamp.from(
         java.time.Instant.ofEpochSecond((i * 7 % 3000).toLong)), i.toLong)
     }.toDF("k", "t", "id")
-    def shape(split: Option[Long]): Seq[String] = {
+    def shape(split: Long): Seq[String] = {
       val df = Sessions.groupingBy(in, col("k"), col("t"), 60,
         Seq(count(lit(1)).as("n")), splitHotKeysOver = split)
       df.queryExecution.toRdd.count()
       df.queryExecution.executedPlan.toString.linesIterator
         .takeWhile(!_.contains("== Initial Plan ==")).toSeq
     }
-    val fast = shape(Some(200000L))
+    val fast = shape(200000L)
     // exact unsplit shape: one Complete SortAggregate over the claim,
     // one data exchange on the bare key, zero split/stitch artifacts
     assert(fast.count(_.contains("SortAggregate(")) == 1, fast.mkString("\n"))

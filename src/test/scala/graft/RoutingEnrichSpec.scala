@@ -1,7 +1,7 @@
 package graft
 
-import graft.operators.{Enrich, Routing}
-import graft.operators.Routing.Branch
+import graft.dsl.LogPath.{Channel, Fallback, Filter, Final, Transform, compileJunction}
+import graft.operators.Enrich
 import org.apache.spark.sql.functions._
 
 class RoutingEnrichSpec extends GraftSuite {
@@ -12,28 +12,28 @@ class RoutingEnrichSpec extends GraftSuite {
   ).toDF("id", "label", "severity")
 
   test("junction fan-out: message goes to every matching branch") {
-    val out = Routing.junction(logs, Seq(
-      Branch("lowsev", col("severity") <= 4),
-      Branch("all", lit(true))), tagBranch = Some("branch"))
+    val out = compileJunction(logs, Seq(
+      Channel("lowsev", Seq(Filter(col("severity") <= 4))),
+      Channel("all", Nil)))
     // 2 rows match lowsev, 4 match all
     assert(out.count() == 6)
   }
 
   test("flags(final) stops later branches") {
-    val out = Routing.junction(logs, Seq(
-      Branch("critical", col("severity") <= 3, isFinal = true),
-      Branch("rest", lit(true))), tagBranch = Some("branch"))
+    val out = compileJunction(logs, Seq(
+      Channel("critical", Seq(Filter(col("severity") <= 3)), Set(Final)),
+      Channel("rest", Nil)))
     assert(out.count() == 4)
-    assert(out.filter(col("branch") === "critical").count() == 1)
-    assert(out.filter(col("branch") === "rest").count() == 3)
+    assert(out.filter(col("__channel") === "critical").count() == 1)
+    assert(out.filter(col("__channel") === "rest").count() == 3)
   }
 
   test("flags(fallback) sees only unmatched rows") {
-    val out = Routing.junction(logs, Seq(
-      Branch("err", col("label") === "err"),
-      Branch("warn", col("label") === "warn"),
-      Branch("other", lit(true), isFallback = true)), tagBranch = Some("branch"))
-    assert(out.filter(col("branch") === "other").select("id")
+    val out = compileJunction(logs, Seq(
+      Channel("err", Seq(Filter(col("label") === "err"))),
+      Channel("warn", Seq(Filter(col("label") === "warn"))),
+      Channel("other", Nil, Set(Fallback))))
+    assert(out.filter(col("__channel") === "other").select("id")
       .collect().map(_.getInt(0)).sorted.toSeq == Seq(3, 4))
   }
 
@@ -42,25 +42,29 @@ class RoutingEnrichSpec extends GraftSuite {
     // col("k") === "x" is SQL NULL for the null-valued row; it must land
     // in the fallback branch, not vanish from every branch
     val df = Seq(("a", null.asInstanceOf[String]), ("b", "x")).toDF("id", "k")
-    val out = Routing.junction(df, Seq(
-      Branch("hit", col("k") === "x", identity, isFinal = true),
-      Branch("rest", lit(true), isFallback = true)), tagBranch = Some("ch"))
-      .select("id", "ch").collect().map(r => (r.getString(0), r.getString(1))).toSet
+    val out = compileJunction(df, Seq(
+      Channel("hit", Seq(Filter(col("k") === "x")), Set(Final)),
+      Channel("rest", Nil, Set(Fallback))))
+      .select("id", "__channel").collect().map(r => (r.getString(0), r.getString(1))).toSet
     assert(out == Set(("a", "rest"), ("b", "hit")))
   }
 
   test("ifElse routes disjointly") {
-    val out = Routing.ifElse(logs, col("severity") <= 4,
-      _.withColumn("route", lit("low")),
-      _.withColumn("route", lit("high")))
+    // `if (cond) { then } else { else }` (lib/cfg-tree.c:399-409): a
+    // final `then` channel and an unfiltered `else` channel
+    val out = compileJunction(logs, Seq(
+      Channel("then", Seq(Filter(col("severity") <= 4),
+        Transform(_.withColumn("route", lit("low")))), Set(Final)),
+      Channel("else", Seq(Transform(_.withColumn("route", lit("high")))))))
     assert(out.count() == 4)
     assert(out.filter(col("route") === "low").count() == 2)
   }
 
   test("branch transforms with different columns union by name") {
-    val out = Routing.junction(logs, Seq(
-      Branch("a", col("severity") <= 3, _.withColumn("extra", lit("x"))),
-      Branch("b", col("severity") > 3)))
+    val out = compileJunction(logs, Seq(
+      Channel("a", Seq(Filter(col("severity") <= 3),
+        Transform(_.withColumn("extra", lit("x"))))),
+      Channel("b", Seq(Filter(col("severity") > 3)))))
     assert(out.columns.contains("extra"))
     assert(out.filter(col("extra").isNull).count() == 3)
   }

@@ -98,7 +98,7 @@ class SessionsSpec extends GraftSuite {
       (k, ts(rnd.nextInt(4000).toLong), i.toLong)
     }
     val in = rows.toDF("k", "t", "id").repartition(13)
-    def run(budget: Option[Long]) =
+    def run(budget: Long) =
       Sessions.groupingBy(in, col("k"), col("t"), 60,
         Seq(count(lit(1)).as("n"),
           Sessions.sortedValues(col("id"), struct(col("t"), col("id"))).as("ids")),
@@ -110,9 +110,9 @@ class SessionsSpec extends GraftSuite {
           r.getString(4)))
         .sortBy(x => (x._1, x._2))
         .toSeq
-    val ref = run(None)
+    val ref = run(Long.MaxValue)
     for (budget <- Seq(50L, 400L, 5000L))
-      assert(run(Some(budget)) == ref, s"budget=$budget diverged")
+      assert(run(budget) == ref, s"budget=$budget diverged")
   }
 
   test("skew-split: one giant session chain-merging across every split " +
@@ -125,7 +125,7 @@ class SessionsSpec extends GraftSuite {
       Seq(("cold", ts(0), 9001L), ("cold", ts(100000), 9002L))
     val in = rows.toDF("k", "t", "id").repartition(7)
     val out = Sessions.groupingBy(in, col("k"), col("t"), 5000,
-      Seq(count(lit(1)).as("n")), splitHotKeysOver = Some(40L))
+      Seq(count(lit(1)).as("n")), splitHotKeysOver = 40L)
       .select(col("key"), col("n"), unix_timestamp(col("session_start")).as("ss"))
       .collect().map(r => (r.getString(0), r.getLong(1), r.getLong(2)))
       .sortBy(x => (x._1, x._3))
@@ -141,7 +141,7 @@ class SessionsSpec extends GraftSuite {
       (k, ts(rnd.nextInt(2500).toLong), i.toLong)
     }
     val in = rows.toDF("k", "t", "id").repartition(11)
-    def run(budget: Option[Long]) =
+    def run(budget: Long) =
       Sessions.suppress(in, col("k"), col("t"), 30, col("id"),
         splitHotKeysOver = budget)
         .select(col("suppress_key"), col("first_id"), col("first_ts_us"),
@@ -150,9 +150,9 @@ class SessionsSpec extends GraftSuite {
         .map(r => (r.getString(0), r.getLong(1), r.getLong(2), r.getLong(3)))
         .sortBy(x => (x._1, x._3))
         .toSeq
-    val ref = run(None)
+    val ref = run(Long.MaxValue)
     for (budget <- Seq(80L, 1000L))
-      assert(run(Some(budget)) == ref, s"budget=$budget diverged")
+      assert(run(budget) == ref, s"budget=$budget diverged")
   }
 
   test("throttle caps rows per key per second") {

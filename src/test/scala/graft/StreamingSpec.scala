@@ -1,6 +1,6 @@
 package graft
 
-import graft.operators.Routing.Branch
+import graft.dsl.LogPath.{Channel, Filter, Final}
 import graft.streaming.{Internal, Sinks, Sources, Stateful}
 import graft.streaming.Stateful.Msg
 import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
@@ -362,8 +362,8 @@ class StreamingSpec extends GraftSuite {
       Msg("other", ts(3), "o1"))
     val out = tmp(); val cp = tmp()
     val q = Sinks.startFanOutParquet(input.toDS().toDF(), out, cp, Seq(
-      Branch("errors", col("key") === "err", isFinal = true),
-      Branch("rest", lit(true))))
+      Channel("errors", Seq(Filter(col("key") === "err")), Set(Final)),
+      Channel("rest", Nil)))
     try q.awaitTermination(60000) finally q.stop()
     assert(spark.read.parquet(out + "/errors").count() == 2)
     assert(spark.read.parquet(out + "/rest").count() == 1)

@@ -1,6 +1,8 @@
 package graft
 
 import graft.config.{ConfigCompiler, ConfigParser}
+import graft.operators.VendorParsers
+import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
 
 /** Vendor scl parsers against the reference's own golden inputs —
@@ -139,8 +141,20 @@ class VendorParsersSpec extends GraftSuite {
         null, 5),
       ("just some message", "other", 1))
       .toDF("message", "program", "facility")
-    val out = graft.dsl.LogPath.appParser(rows,
-        graft.operators.VendorParsers.applications)
+    // the scl `application name[topic] { filter; parser }` blocks
+    // (scl/iptables/iptables.conf, scl/sudo/sudo.conf,
+    // scl/fortigate/fortigate.conf) as (name, detect, parse) triples:
+    // detection reads the post-syslog-parse columns, fortigate the raw
+    // `<pri>date=` form like its syslog-raw topic
+    val applications: Seq[(String, Column, DataFrame => DataFrame)] = Seq(
+      ("iptables",
+        col("facility") === 0 && col("program") === "kernel" &&
+          col("message").contains("PROTO="),
+        VendorParsers.iptables(_)),
+      ("sudo", col("program") === "sudo", VendorParsers.sudo(_)),
+      ("fortigate", col("message").rlike("^<[0-9]+>date="),
+        VendorParsers.fortigate(_)))
+    val out = graft.dsl.LogPath.appParser(rows, applications)
       .select(col("__channel"), col("program"),
         element_at(col("values"), ".iptables.PROTO").as("proto"),
         element_at(col("values"), ".sudo.COMMAND").as("cmd"),
