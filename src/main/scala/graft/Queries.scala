@@ -3915,12 +3915,7 @@ object Queries {
   private val multimodalVideoHash = Q("multimodal_video_hash",
     (s, d) => {
       import s.implicits._
-      // sizing pass skipped (0): the fixtures are GENERATED — the
-      // byte-sum pre-pass would LZW-encode every clip once just to
-      // count bytes, doubling the query's dominant cost; the parquet
-      // scan upstream already spreads partitions
-      Multimodal.videoDHash(Multimodal.videoHashFixtures(s, d),
-          targetPartitionBytes = 0)
+      Multimodal.videoDHash(Multimodal.videoHashFixtures(s, d))
         .select(col("media_id"), col("n_frames"), col("vhash"), col("tsig"))
         .orderBy(col("media_id"))
     },
@@ -3962,10 +3957,8 @@ object Queries {
   private val dedupVideoDhash = Q("dedup_video_dhash",
     (s, d) => {
       import s.implicits._
-      // sizing pass skipped (0): see multimodal_video_hash
       Multimodal.videoDHashPairs(
-          Multimodal.videoDHash(Multimodal.videoHashFixtures(s, d),
-            targetPartitionBytes = 0))
+          Multimodal.videoDHash(Multimodal.videoHashFixtures(s, d)))
         .orderBy(col("id_a"), col("id_b"))
     },
     Some(s"""$videoRowbytesCte
@@ -3990,8 +3983,7 @@ object Queries {
   private val dedupVideoCc = Q("dedup_video_cc",
     (s, d) => {
       import s.implicits._
-      val hashes = Multimodal.videoDHash(Multimodal.videoHashFixtures(s, d),
-          targetPartitionBytes = 0)
+      val hashes = Multimodal.videoDHash(Multimodal.videoHashFixtures(s, d))
         .toDF().localCheckpoint(false)
       val edges = Multimodal.videoDHashClusterEdges(
         hashes.as[Multimodal.VideoHash])
@@ -4132,7 +4124,7 @@ object Queries {
       import s.implicits._
       // single-decode: the fingerprints feed pairs AND scores
       val hashes = Multimodal.audioEnergyHash(
-          Multimodal.audioHashFixtures(s, d), targetPartitionBytes = 0)
+          Multimodal.audioHashFixtures(s, d))
         .toDF().localCheckpoint(false)
       // the r11 scale-killer fix: edges over DISTINCT hashes + linear
       // member edges — the fixture's identical-hash clusters grow ∝ N

@@ -510,7 +510,7 @@ object ConfigCompiler {
           // a failed init hook aborts the whole pipeline: release any
           // listeners already bound
           listeners.values.foreach(l =>
-            try l.stop() catch { case _: Throwable => () })
+            try l.stop() catch { case scala.util.control.NonFatal(_) => () })
           throw e
         }
         listeners.get(name).foreach { inner =>

@@ -12,9 +12,11 @@ import org.apache.spark.sql.functions._
   * CSEs the shared prefix; the COW clone of `lib/logmpx.c:105` is free
   * on immutable rows).
   *
-  * A channel's "match" predicate is the conjunction of its `filter()`
-  * elements — what decides final/fallback delivery in the reference
-  * (`PIF_BRANCH_FINAL`, mpx fallback pass `lib/logmpx.c:88-109`).
+  * A channel's "match" predicate is the conjunction of its leading
+  * `filter()` elements — what decides final/fallback delivery in the
+  * reference (`PIF_BRANCH_FINAL`, mpx fallback pass
+  * `lib/logmpx.c:88-109`). A filter after a parser or rewrite reads the
+  * rewritten row, so it runs in the channel's body instead.
   */
 object LogPath {
 
@@ -36,13 +38,14 @@ object LogPath {
   final case class Channel(name: String, elements: Seq[Element],
       flags: Set[Flag] = Set.empty) {
     /** The predicate deciding whether a message "matches" this channel:
-      * the conjunction of its top-level filters. */
+      * the conjunction of its leading filters. */
     private[dsl] def matchPred: Column =
-      elements.collect { case Filter(p) => p }
+      elements.takeWhile(_.isInstanceOf[Filter]).collect { case Filter(p) => p }
         .reduceOption(_ && _).getOrElse(lit(true))
-    /** The channel's elements after its top-level filters, which
-      * [[deliveryPredicates]] has already folded into delivery. */
-    def body: Seq[Element] = elements.filterNot(_.isInstanceOf[Filter])
+    /** The channel's elements after its leading filters, which
+      * [[deliveryPredicates]] has already folded into delivery. A later
+      * filter stays here and reads the rows the elements before it wrote. */
+    def body: Seq[Element] = elements.dropWhile(_.isInstanceOf[Filter])
   }
 
   /** Compile a path (sequence of elements) over an input DataFrame —
@@ -64,7 +67,14 @@ object LogPath {
     * non-fallback channel matched. Every fan-out — the junction compile
     * and the streaming fan-out sink
     * (`graft.streaming.Sinks.foreachBatchFanOut`) — delivers through
-    * these. */
+    * these.
+    *
+    * A channel's match is read by another channel when it is FINAL with
+    * a later channel in its pass, or when it is a non-fallback channel
+    * of a junction that has a fallback. A filter after a rewrite decides
+    * that match on the rewritten row, which no predicate on the
+    * junction's input expresses, so such a channel fails the compile
+    * instead of misrouting. */
   def deliveryPredicates(channels: Seq[Channel]): Seq[Column] = {
     // null-safe match: a filter over a NULL column (e.g. program on an
     // unparsed line) evaluates to SQL NULL, and a raw NULL in the
@@ -73,6 +83,15 @@ object LogPath {
     // simply don't match on unset values, so NULL coerces to false
     def pred(ch: Channel): Column = coalesce(ch.matchPred, lit(false))
     def isFallback(ch: Channel): Boolean = ch.flags.contains(Fallback)
+    channels.zipWithIndex.foreach { case (ch, i) =>
+      val readByOthers = (ch.flags.contains(Final) &&
+          channels.drop(i + 1).exists(isFallback(_) == isFallback(ch))) ||
+        (!isFallback(ch) && channels.exists(isFallback))
+      if (readByOthers && ch.body.exists(_.isInstanceOf[Filter]))
+        throw new IllegalArgumentException(s"channel ${ch.name}: a filter " +
+          "after a parser, rewrite or junction decides final/fallback " +
+          "delivery to other channels; move it before them")
+    }
     val anyMatch = channels.filterNot(isFallback).map(pred)
       .reduceOption(_ || _).getOrElse(lit(false))
     // the matches of the FINAL channels seen so far, per pass

@@ -51,40 +51,16 @@ object Multimodal {
       if (row.bytes.isEmpty) -1 else row.bytes(0) & 0xFF, checksum, feature)
   }
 
-  /** Partition shaping by payload bytes (the shared opener of every
-    * batched decode pass): partitions sized so each holds
-    * ~`targetPartitionBytes` of media, hash-spread on media_id — one
-    * 4 GB video next to thumbnails must not serialize a partition
-    * behind it. The sizing aggregate EXECUTES the input once; for a
-    * file-backed corpus that's a cheap column scan, but for GENERATED
-    * frames (fixture corpora) it doubles the dominant generation cost
-    * — such callers pass `targetPartitionBytes = 0` to keep the
-    * input's own partitioning. */
-  private def shapeByBytes[T](ds: Dataset[T],
-      targetPartitionBytes: Long): Dataset[T] =
-    if (targetPartitionBytes <= 0) ds
-    else {
-      val sumRow = ds.toDF().agg(sum(octet_length(col("bytes")))).head
-      val total = if (sumRow.isNullAt(0)) 0L else sumRow.getLong(0)
-      val minParts = ds.sparkSession.sparkContext.defaultParallelism
-      val parts = math.max(minParts,
-        math.min(total / targetPartitionBytes + 1, minParts * 16L).toInt)
-      ds.repartition(parts, col("media_id"))
-    }
-
   /** Batched decode pass: mapPartitions so a real decoder can amortize
     * per-batch init (model load, codec context) across the partition —
-    * the same shape `mapInPandas` gives Python. The partition count is
-    * sized from total payload bytes / `targetPartitionBytes` (one cheap
-    * binary-length pre-pass) so one 4 GB video next to thumbnails does
-    * not serialize a whole partition behind it; hash-spread on media_id.
-    * Pass `targetPartitionBytes = 0` to skip the sizing pre-pass and
-    * decode in place. */
-  def extractFeatures(ds: Dataset[MediaRow],
-      targetPartitionBytes: Long = 128L << 20): Dataset[MediaFeatures] = {
+    * the same shape `mapInPandas` gives Python. Every decode pass runs
+    * over its input's own partitioning, with no shuffle and no job while
+    * the frame is built: a parquet scan already packs splits by bytes
+    * (`FilePartition.maxSplitBytes`), and the scan floor spreads small
+    * bench-scale scans (`Tables.withScanFloor`). */
+  def extractFeatures(ds: Dataset[MediaRow]): Dataset[MediaFeatures] = {
     import ds.sparkSession.implicits._
-    val shaped = shapeByBytes(ds, targetPartitionBytes)
-    shaped.mapPartitions { it =>
+    ds.mapPartitions { it =>
       // per-partition init happens here (decoder/model handle)
       it.map(decodeStub)
     }
@@ -107,14 +83,12 @@ object Multimodal {
       height: Int, sample_rate: Int, channels: Int, bits_per_sample: Int,
       duration_ms: Long = -1L)
 
-  /** Batched header decode: same partition-sizing/mapPartitions shape as
+  /** Batched header decode: same in-place mapPartitions shape as
     * [[extractFeatures]], but the decoder is the real container-header
     * parser — dimensions and sample rates come from the bytes. */
-  def extractHeaders(ds: Dataset[MediaRow],
-      targetPartitionBytes: Long = 128L << 20): Dataset[MediaMeta] = {
+  def extractHeaders(ds: Dataset[MediaRow]): Dataset[MediaMeta] = {
     import ds.sparkSession.implicits._
-    val shaped = shapeByBytes(ds, targetPartitionBytes)
-    shaped.mapPartitions { it =>
+    ds.mapPartitions { it =>
       it.map { row =>
         val m = MediaHeaders.decode(row.bytes)
         MediaMeta(row.media_id, m.format, m.width, m.height,
@@ -243,11 +217,9 @@ object Multimodal {
   /** Batched PCM decode + audio features: same shape as
     * [[extractSampleStats]] — per-row constant cost, narrow pipeline,
     * non-audio/undecodable payloads drop. */
-  def extractAudioFeatures(ds: Dataset[MediaRow],
-      targetPartitionBytes: Long = 128L << 20): Dataset[AudioFeatures] = {
+  def extractAudioFeatures(ds: Dataset[MediaRow]): Dataset[AudioFeatures] = {
     import ds.sparkSession.implicits._
-    val shaped = shapeByBytes(ds, targetPartitionBytes)
-    shaped.mapPartitions { it =>
+    ds.mapPartitions { it =>
       it.flatMap { row =>
         Option(MediaSamples.decode(row.bytes))
           .filter(d => d.format == "wav" && d.samples.nonEmpty)
@@ -271,14 +243,12 @@ object Multimodal {
     }
   }
 
-  /** Batched sample decode + stats: same partition-sizing shape as
+  /** Batched sample decode + stats: same in-place shape as
     * [[extractFeatures]], decoder is [[MediaSamples.decode]]. Undecodable
     * payloads (JPEG and corrupt bytes) drop — the codec boundary. */
-  def extractSampleStats(ds: Dataset[MediaRow],
-      targetPartitionBytes: Long = 128L << 20): Dataset[SampleStats] = {
+  def extractSampleStats(ds: Dataset[MediaRow]): Dataset[SampleStats] = {
     import ds.sparkSession.implicits._
-    val shaped = shapeByBytes(ds, targetPartitionBytes)
-    shaped.mapPartitions { it =>
+    ds.mapPartitions { it =>
       it.flatMap { row =>
         Option(MediaSamples.decode(row.bytes)).filter(_.samples.nonEmpty)
           .map { d =>
@@ -316,11 +286,9 @@ object Multimodal {
     * the column widths — bit-exact, so an external oracle replays it in
     * pure integer arithmetic. Images narrower than the grid (w<9 or
     * h<8) drop. One narrow partition pass, no shuffle. */
-  def imageDHash(ds: Dataset[MediaRow],
-      targetPartitionBytes: Long = 128L << 20): Dataset[ImageHash] = {
+  def imageDHash(ds: Dataset[MediaRow]): Dataset[ImageHash] = {
     import ds.sparkSession.implicits._
-    val shaped = shapeByBytes(ds, targetPartitionBytes)
-    shaped.mapPartitions { it =>
+    ds.mapPartitions { it =>
       it.flatMap { row =>
         val meta = MediaHeaders.decode(row.bytes)
         val dec = MediaSamples.decode(row.bytes)
@@ -514,11 +482,9 @@ object Multimodal {
     * energies are Σ s² longs and the mean comparison cross-multiplies
     * by window lengths, so an external oracle replays every bit.
     * Clips shorter than 65 samples drop. Narrow map-only pass. */
-  def audioEnergyHash(ds: Dataset[MediaRow],
-      targetPartitionBytes: Long = 128L << 20): Dataset[AudioHash] = {
+  def audioEnergyHash(ds: Dataset[MediaRow]): Dataset[AudioHash] = {
     import ds.sparkSession.implicits._
-    val shaped = shapeByBytes(ds, targetPartitionBytes)
-    shaped.mapPartitions { it =>
+    ds.mapPartitions { it =>
       it.flatMap { row =>
         val dec = MediaSamples.decode(row.bytes)
         if (dec == null || dec.format != "wav" || dec.samples.length < 65) None
@@ -684,9 +650,9 @@ object Multimodal {
   def decontaminateAudio(corpus: Dataset[MediaRow],
       benchmark: Dataset[MediaRow], maxHamming: Int = 3): DataFrame =
     decontaminate64(
-      audioEnergyHash(corpus, targetPartitionBytes = 0).toDF()
+      audioEnergyHash(corpus).toDF()
         .select(col("media_id"), col("ahashBits").as("bits")),
-      audioEnergyHash(benchmark, targetPartitionBytes = 0).toDF()
+      audioEnergyHash(benchmark).toDF()
         .select(col("media_id"), col("ahashBits").as("bits")),
       maxHamming, Nil, identity)
 
@@ -699,10 +665,10 @@ object Multimodal {
       benchmark: Dataset[MediaRow], maxHamming: Int = 3,
       maxShift: Int = 2): DataFrame =
     decontaminate64(
-      videoDHash(corpus, targetPartitionBytes = 0).toDF()
+      videoDHash(corpus).toDF()
         .select(col("media_id"), col("vhashBits").as("bits"),
           col("tsig"), col("n_frames")),
-      videoDHash(benchmark, targetPartitionBytes = 0).toDF()
+      videoDHash(benchmark).toDF()
         .select(col("media_id"), col("vhashBits").as("bits"),
           col("tsig"), col("n_frames")),
       maxHamming, Seq("tsig", "n_frames"),
@@ -756,11 +722,10 @@ object Multimodal {
     * (2·count > F strictly). Clips narrower than the 9×8 grid or with
     * undecodable frames drop. One narrow partition pass, no shuffle —
     * per-row cost is bounded by `maxFrames` frames of w·h pixels. */
-  def videoDHash(ds: Dataset[MediaRow], maxFrames: Int = 64,
-      targetPartitionBytes: Long = 128L << 20): Dataset[VideoHash] = {
+  def videoDHash(ds: Dataset[MediaRow],
+      maxFrames: Int = 64): Dataset[VideoHash] = {
     import ds.sparkSession.implicits._
-    val shaped = shapeByBytes(ds, targetPartitionBytes)
-    shaped.mapPartitions { it =>
+    ds.mapPartitions { it =>
       it.flatMap { row =>
         val meta = MediaHeaders.decode(row.bytes)
         val frames =

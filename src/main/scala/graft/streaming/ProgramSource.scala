@@ -53,9 +53,6 @@ object ProgramSource {
 
     def boundPort: Int = -1
     def receivedCount: Long = spool.receivedCount
-    /** The pump ends on its own at EOF; poll this for exit-on-eof. */
-    def isRunning: Boolean = running.get()
-
     def stop(): Unit = {
       running.set(false)
       onStop() // unblocks the reader: destroys the child / closes `in`

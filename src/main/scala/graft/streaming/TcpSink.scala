@@ -93,7 +93,8 @@ object TcpSink {
     * SocketChannel, abstracted to its OutputStream. */
   private final class Conn(closeable: AutoCloseable,
       val out: java.io.OutputStream) {
-    def close(): Unit = try closeable.close() catch { case _: Throwable => () }
+    def close(): Unit =
+      try closeable.close() catch { case scala.util.control.NonFatal(_) => () }
   }
 
   private def connect(cfg: Config, idx: Int): Conn = cfg.unixPath match {

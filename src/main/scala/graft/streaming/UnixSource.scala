@@ -35,7 +35,6 @@ object UnixSource {
 
     /** Unix sockets have no port; kept for the SocketListener shape. */
     def boundPort: Int = 0
-    def socketPath: String = path
     def receivedCount: Long = spool.receivedCount
 
     def start(): Listener = {

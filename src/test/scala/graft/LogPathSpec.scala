@@ -133,6 +133,39 @@ class LogPathSpec extends GraftSuite {
     assert(got == Set((1, "errs"), (3, "errs"), (2, "big"), (4, "rest")))
   }
 
+  test("a filter after a rewrite reads the rewritten row") {
+    val out = LogPath.compileJunction(df, Seq(
+      Channel("a", Seq(Filter(col("size") > 50),
+        Transform(_.withColumn("size", col("size") * 10)),
+        Filter(col("size") > 2500))),
+      Channel("b", Seq(Transform(_.withColumn("level", lit("x"))),
+        Filter(col("level") === "x")))))
+    val got = out.select("id", "size", "__channel").collect()
+      .map(r => (r.getInt(0), r.getInt(1), r.getString(2))).toSet
+    // a: 200 and 300 pass the leading filter, only 3000 the late one;
+    // b's late filter matches every rewritten row
+    assert(got == Set((3, 3000, "a"), (1, 10, "b"), (2, 200, "b"),
+      (3, 300, "b"), (4, 5, "b")))
+  }
+
+  test("a late filter that would decide final/fallback delivery fails " +
+      "the compile, naming its channel") {
+    val input = Seq(0, 0, 0, 0).toDF("x")
+    val e = intercept[IllegalArgumentException](LogPath.compileJunction(input,
+      Seq(Channel("a", Seq(Transform(_.withColumn("x", lit(1))),
+          Filter(col("x") === 1)), Set(Final)),
+        Channel("b", Nil, Set(Fallback)))))
+    assert(e.getMessage.contains("channel a"), e.getMessage)
+    // the last final channel of its pass, with no fallback: nothing reads
+    // its match, so the late filter just runs in its body
+    val last = LogPath.compileJunction(input, Seq(
+      Channel("a", Seq(Filter(col("x") === 1)), Set(Final)),
+      Channel("c", Seq(Transform(_.withColumn("x", lit(1))),
+        Filter(col("x") === 1)), Set(Final))))
+    assert(last.select("__channel").as[String].collect().toSeq ==
+      Seq.fill(4)("c"))
+  }
+
   // ---- random junctions against a model of the mpx rules -------------
 
   /** One input row: the nullable `i` (int) and `d` (double) columns. */

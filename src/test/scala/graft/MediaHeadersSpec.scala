@@ -91,8 +91,7 @@ class MediaHeadersSpec extends GraftSuite {
 
   test("spark fixture corpus decodes end to end") {
     val meta = graft.pipeline.Multimodal.extractHeaders(
-      graft.pipeline.Multimodal.mediaFixtures(spark, "/root/testdata/sf0.001"),
-      targetPartitionBytes = 0)
+      graft.pipeline.Multimodal.mediaFixtures(spark, "/root/testdata/sf0.001"))
     assert(meta.filter(meta("format") === "unknown").count() == 0)
   }
 
@@ -201,8 +200,8 @@ class MediaHeadersSpec extends GraftSuite {
 
   test("spark gif corpus: stats survive the distributed decode") {
     val stats = graft.pipeline.Multimodal.extractSampleStats(
-      graft.pipeline.Multimodal.gifFixtures(spark, "/root/testdata/sf0.001"),
-      targetPartitionBytes = 0).collect()
+      graft.pipeline.Multimodal.gifFixtures(spark, "/root/testdata/sf0.001"))
+      .collect()
     assert(stats.nonEmpty)
     stats.foreach { s =>
       val w = 16 + s.media_id % 97; val h = 16 + s.media_id % 53
@@ -241,8 +240,7 @@ class MediaHeadersSpec extends GraftSuite {
       graft.pipeline.Multimodal.MediaRow(3L, "audio/wav",
         Array[Byte](1, 2, 3), 0, 0)
     ).toDS()
-    val out = graft.pipeline.Multimodal.extractAudioFeatures(rows,
-      targetPartitionBytes = 0).collect()
+    val out = graft.pipeline.Multimodal.extractAudioFeatures(rows).collect()
     assert(out.map(_.media_id).toSeq == Seq(1L))
     val f = out.head
     assert(f.n_samples == 5 && f.energy == 30L && f.peak == 4L && f.zcr == 2L)
@@ -251,8 +249,8 @@ class MediaHeadersSpec extends GraftSuite {
 
   test("spark audio corpus: features survive the distributed decode") {
     val feats = graft.pipeline.Multimodal.extractAudioFeatures(
-      graft.pipeline.Multimodal.audioFixtures(spark, "/root/testdata/sf0.001"),
-      targetPartitionBytes = 0).collect()
+      graft.pipeline.Multimodal.audioFixtures(spark, "/root/testdata/sf0.001"))
+      .collect()
     assert(feats.nonEmpty)
     feats.foreach { f =>
       val amp = 1 + f.media_id % 50
@@ -266,8 +264,8 @@ class MediaHeadersSpec extends GraftSuite {
 
   test("spark pixel corpus: stats survive the distributed decode") {
     val stats = graft.pipeline.Multimodal.extractSampleStats(
-      graft.pipeline.Multimodal.pixelFixtures(spark, "/root/testdata/sf0.001"),
-      targetPartitionBytes = 0).collect()
+      graft.pipeline.Multimodal.pixelFixtures(spark, "/root/testdata/sf0.001"))
+      .collect()
     assert(stats.nonEmpty)
     stats.foreach { s =>
       if (s.fmt == "png") {

@@ -112,13 +112,13 @@ class PipelineSpec extends GraftSuite {
       clip(0, 9, 3),  // A A A B A A A A A
       clip(1, 8, 2),  // clip 0 minus its first frame
       clip(2, 9, 6))) // different cut position
-    val hs = Multimodal.videoDHash(ds, targetPartitionBytes = 0)
+    val hs = Multimodal.videoDHash(ds)
       .collect()
     val byId = hs.map(v => v.media_id -> v).toMap
     assert(byId(0L).vhashBits == byId(1L).vhashBits) // majority = hash(A)
     assert(byId(1L).tsig == (byId(0L).tsig >>> 1)) // the trim IS a shift
     def pairs(shift: Int) = Multimodal.videoDHashPairs(
-        Multimodal.videoDHash(ds, targetPartitionBytes = 0),
+        Multimodal.videoDHash(ds),
         maxShift = shift)
       .select("id_a", "id_b").as[(Long, Long)].collect().toSet
     assert(!pairs(0).contains((0L, 1L))) // exact equality misses the trim
@@ -128,8 +128,8 @@ class PipelineSpec extends GraftSuite {
       s"differently-cut control false-paired: $shifted")
     // zero new false positives on the fixture corpus: the planted
     // copies are all UNtrimmed, so ±2 tolerance must not add pairs
-    val fx = Multimodal.videoDHash(Multimodal.videoHashFixtures(spark, sf),
-      targetPartitionBytes = 0).toDF().localCheckpoint(false)
+    val fx = Multimodal.videoDHash(Multimodal.videoHashFixtures(spark, sf))
+      .toDF().localCheckpoint(false)
     def fxPairs(shift: Int) = Multimodal.videoDHashPairs(
         fx.as[Multimodal.VideoHash], maxShift = shift)
       .select("id_a", "id_b").as[(Long, Long)].collect().toSet

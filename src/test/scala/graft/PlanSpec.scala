@@ -806,11 +806,9 @@ class PlanSpec extends GraftSuite {
     val pairPlans = Seq(
       "audio" -> Multimodal.audioEnergyHashPairs(
         Multimodal.audioEnergyHash(
-          Multimodal.audioHashFixtures(spark, sf),
-          targetPartitionBytes = 0)),
+          Multimodal.audioHashFixtures(spark, sf))),
       "video" -> Multimodal.videoDHashPairs(
-        Multimodal.videoDHash(Multimodal.videoHashFixtures(spark, sf),
-          targetPartitionBytes = 0)))
+        Multimodal.videoDHash(Multimodal.videoHashFixtures(spark, sf))))
     for ((q, df) <- pairPlans) {
       val p = df.queryExecution.executedPlan.toString
       assert(!p.contains("Cartesian") && !p.contains("BroadcastNestedLoop"),
